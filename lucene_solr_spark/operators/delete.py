@@ -136,7 +136,7 @@ def delete_by_term(spark: SparkSession, index_dir: str, term: str) -> Manifest:
     """deleteDocuments(Term): tombstone every doc containing ``term``."""
     from .search import IndexReader
 
-    rdr = IndexReader(spark, index_dir, cache_stats=False)
+    rdr = IndexReader(spark, index_dir)
     return delete_documents(spark, index_dir, rdr.termfreq(term).select("doc_id"))
 
 
@@ -165,7 +165,7 @@ def update_documents(spark: SparkSession, index_dir: str,
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no committed manifest under {index_dir}")
-    rdr = IndexReader(spark, index_dir, cache_stats=False)
+    rdr = IndexReader(spark, index_dir)
     keys = new_rows.select(*key_cols).distinct()
     old_ids = (rdr.docmeta.join(keys, list(key_cols), "left_semi")
                .select("doc_id"))

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.bm25 import K1, idf as idf_fn, norm_cache, score_tf, term_weight
+from ..functions.bm25 import idf as idf_fn, norm_cache, score_tf, term_weight
 from ..functions.postings import (
     decode_block_docs,
     decode_docs,
@@ -63,6 +63,9 @@ from ..plans.query import (
     SpanOrQuery,
     TermQuery,
     expand_multiterm,
+    leaves,
+    map_leaves,
+    node_terms,
     parse_query,
     query_terms,
     rewrite,
@@ -215,7 +218,7 @@ class _SegmentScorer:
 
     def __init__(self, terms: Dict[str, _TermPostings], weights: Dict[str, np.float32],
                  cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]], seg: int,
-                 phrase_weights: Dict[Tuple[str, ...], np.float32],
+                 phrase_weights: Dict[Query, np.float32],
                  score_fn=score_tf):
         self.terms = terms
         self.weights = weights
@@ -258,9 +261,9 @@ class _SegmentScorer:
             docs = np.arange(base, base + n, dtype=np.int64)
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, PhraseQuery):
-            return self._eval_phrase(q)
+            return self._eval_phrase(q, [(t,) for t in q.terms], q.slop)
         if isinstance(q, MultiPhraseQuery):
-            return self._eval_multiphrase(q)
+            return self._eval_phrase(q, q.slots, 0)
         if isinstance(q, SpanFirstQuery):
             return self._eval_spanfirst(q)
         if isinstance(q, SpanOrQuery):
@@ -299,7 +302,7 @@ class _SegmentScorer:
             idx = np.searchsorted(docs, tp.docs)
             freqs[idx] += tp.tfs
             norms[idx] = tp.norms
-        w = self.phrase_weights[("__or__",) + q.terms]
+        w = self.phrase_weights[q]
         return docs, self.score_fn(w, freqs, norms, self.cache)
 
     def _eval_spannot(self, q: SpanNotQuery) -> Tuple[np.ndarray, np.ndarray]:
@@ -330,31 +333,39 @@ class _SegmentScorer:
         return inc.docs[hit], self.score_fn(
             w, tfs[hit], inc.norms[hit], self.cache)
 
-    def _eval_phrase(self, q: PhraseQuery) -> Tuple[np.ndarray, np.ndarray]:
-        tps = [self.terms.get(t) for t in q.terms]
-        if any(tp is None for tp in tps):
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        cand = tps[0].docs
-        for tp in tps[1:]:
-            cand = cand[np.isin(cand, tp.docs, assume_unique=True)]
+    def _eval_phrase(self, q: Query, slots, slop: int) -> Tuple[np.ndarray, np.ndarray]:
+        """PhraseQuery (one alternative per slot) and MultiPhraseQuery:
+        per slot, the doc set is the UNION of its alternatives' postings
+        and the position set their merged sorted positions (Lucene's
+        UnionPostingsEnum); candidates intersect the slot doc sets, and
+        tf counts anchors where every slot matches at its offset
+        (exact adjacency), or the sloppy pseudo-freq when slop > 0."""
+        slot_tps = []
+        for slot in slots:
+            tps = [self.terms[t] for t in slot if t in self.terms]
+            if not tps:
+                return np.empty(0, np.int64), np.empty(0, np.float32)
+            slot_tps.append(tps)
+        cand = None
+        for tps in slot_tps:
+            d = tps[0].docs if len(tps) == 1 else \
+                np.unique(np.concatenate([tp.docs for tp in tps]))
+            cand = d if cand is None else cand[np.isin(cand, d, assume_unique=True)]
             if cand.size == 0:
                 return np.empty(0, np.int64), np.empty(0, np.float32)
         # two-phase (SURVEY.md §4.2 TwoPhaseIterator): positions decoded
         # only for candidate docs
-        pos_maps = []
-        for tp in tps:
-            plist = tp.positions()
-            sel = np.searchsorted(tp.docs, cand)
-            pos_maps.append([plist[i] for i in sel])
-        norms = tps[0].norms[np.searchsorted(tps[0].docs, cand)]
-        if q.slop > 0:
+        pos_maps = [_slot_positions(tps, cand) for tps in slot_tps]
+        norms = np.empty(len(cand), dtype=np.int64)
+        for tp in reversed(slot_tps[0]):  # a doc's norm is the same in every posting
+            idx = np.minimum(np.searchsorted(tp.docs, cand), len(tp.docs) - 1)
+            has = tp.docs[idx] == cand
+            norms[has] = tp.norms[idx[has]]
+        if slop > 0:
             from ..plans.query import sloppy_phrase_freq
 
-            freqs = np.zeros(len(cand), dtype=np.float64)
-            for ci in range(len(cand)):
-                freqs[ci] = sloppy_phrase_freq(
-                    [pm[ci] for pm in pos_maps], q.slop
-                )
+            freqs = np.array([sloppy_phrase_freq([pm[ci] for pm in pos_maps], slop)
+                              for ci in range(len(cand))], dtype=np.float64)
         else:
             freqs = np.zeros(len(cand), dtype=np.int64)
             for ci in range(len(cand)):
@@ -366,65 +377,7 @@ class _SegmentScorer:
                         break
                 freqs[ci] = int(ok.sum())
         hit = freqs > 0
-        w = self.phrase_weights[q.terms]
-        return cand[hit], self.score_fn(w, freqs[hit], norms[hit], self.cache)
-
-    def _eval_multiphrase(self, q) -> Tuple[np.ndarray, np.ndarray]:
-        """MultiPhraseQuery (exact adjacency): per slot, the doc set is
-        the UNION of its alternatives' postings and the position set
-        their merged sorted positions (Lucene's UnionPostingsEnum);
-        candidates intersect the slot doc-unions, tf counts anchors
-        where every slot matches one alternative."""
-        slot_tps = []
-        for slot in q.slots:
-            tps = [self.terms[t] for t in slot if t in self.terms]
-            if not tps:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-            slot_tps.append(tps)
-
-        def slot_docs(tps):
-            if len(tps) == 1:
-                return tps[0].docs
-            return np.unique(np.concatenate([tp.docs for tp in tps]))
-
-        cand = slot_docs(slot_tps[0])
-        for tps in slot_tps[1:]:
-            cand = cand[np.isin(cand, slot_docs(tps))]
-            if cand.size == 0:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-        # two-phase: positions decoded only for candidate docs
-        pos_maps = []
-        for tps in slot_tps:
-            decoded = [(tp, tp.positions()) for tp in tps]
-            per_doc = []
-            for d in cand:
-                acc = []
-                for tp, plist in decoded:
-                    j = int(np.searchsorted(tp.docs, d))
-                    if j < len(tp.docs) and tp.docs[j] == d:
-                        acc.append(np.asarray(plist[j]))
-                per_doc.append(acc[0] if len(acc) == 1
-                               else np.unique(np.concatenate(acc)))
-            pos_maps.append(per_doc)
-        norms = np.empty(len(cand), dtype=np.int64)
-        for ci, d in enumerate(cand):
-            for tp in slot_tps[0]:
-                j = int(np.searchsorted(tp.docs, d))
-                if j < len(tp.docs) and tp.docs[j] == d:
-                    norms[ci] = tp.norms[j]
-                    break
-        freqs = np.zeros(len(cand), dtype=np.int64)
-        for ci in range(len(cand)):
-            first = pos_maps[0][ci]
-            ok = np.ones(len(first), dtype=bool)
-            for off, pm in enumerate(pos_maps[1:], start=1):
-                ok &= np.isin(first + off, pm[ci], assume_unique=True)
-                if not ok.any():
-                    break
-            freqs[ci] = int(ok.sum())
-        hit = freqs > 0
-        w = self.phrase_weights[("__mp__",) + tuple(
-            t for slot in q.slots for t in slot)]
+        w = self.phrase_weights[q]
         return cand[hit], self.score_fn(w, freqs[hit], norms[hit], self.cache)
 
     def _eval_dismax(self, q: DisjunctionMaxQuery) -> Tuple[np.ndarray, np.ndarray]:
@@ -478,6 +431,21 @@ class _SegmentScorer:
         return allowed, acc
 
 
+def _slot_positions(tps: List[_TermPostings], cand: np.ndarray) -> List[np.ndarray]:
+    """Per candidate doc (each held by at least one of ``tps``): the
+    sorted positions of the slot, unioned over its alternatives."""
+    if len(tps) == 1:
+        plist = tps[0].positions()
+        return [plist[i] for i in np.searchsorted(tps[0].docs, cand)]
+    per_doc: List[List[np.ndarray]] = [[] for _ in cand]
+    for tp in tps:
+        plist = tp.positions()
+        idx = np.searchsorted(tp.docs, cand)
+        for ci in np.flatnonzero(np.isin(cand, tp.docs, assume_unique=True)):
+            per_doc[ci].append(np.asarray(plist[idx[ci]]))
+    return [a[0] if len(a) == 1 else np.unique(np.concatenate(a)) for a in per_doc]
+
+
 def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]:
     """Vectorized leaf collector: score desc, doc_id asc tie-break
     (`[U] .../search/TopScoreDocCollector.java`, `HitQueue.java`)."""
@@ -503,14 +471,17 @@ def _mask_live(docs: np.ndarray, scores: np.ndarray,
     return docs[~dead], scores[~dead]
 
 
-def make_query_kernel(query: Query, weights: Dict[str, np.float32],
-                      phrase_weights: Dict[Tuple[str, ...], np.float32],
+def make_query_kernel(query: Query, weights: Dict[Tuple[str, float], np.float32],
+                      phrase_weights: Dict[Query, np.float32],
                       cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]],
                       k: int, prune: str = "maxscore",
                       deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
-    """applyInPandas kernel over one segment's posting rows for the
-    query's terms -> per-segment top-k + exact hit count.
+    """mapInPandas kernel over the posting rows of the query's terms,
+    grouped per segment -> per-segment top-k + exact hit count.
+
+    ``weights`` maps (term, boost) to a term weight; ``phrase_weights``
+    maps each Phrase/MultiPhrase/SpanOr node to its multi-term weight.
 
     ``deleted``: sorted tombstoned doc_ids (operators/delete.py). With
     deletes present the MaxScore path is disabled: its theta comes from
@@ -660,15 +631,15 @@ STATS_CACHE_MAX_TERMS = 250_000
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
-    ``cache_stats=True`` (default) collects the global term->docFreq
-    map ONCE at open — Lucene's in-memory term dictionary role — so
-    every query runs a single Spark job instead of stats+search. The
-    collect is guarded by STATS_CACHE_MAX_TERMS (manifest per-segment
-    n_terms bound); huge indexes fall back to the per-query stats agg.
+    Nothing is collected at open beyond the manifest and the tombstone
+    ids. Global docFreq is fetched per query term by a pushdown-pruned
+    postings agg (``global_dfs``) and memoized in a driver LRU bounded
+    by STATS_CACHE_MAX_TERMS, so a query whose terms are all cached
+    runs one Spark job instead of stats + search.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 cache_stats: bool = True, similarity: str = "bm25"):
+                 similarity: str = "bm25"):
         self.spark = spark
         self.index_dir = index_dir
         m = read_manifest(index_dir)
@@ -685,17 +656,26 @@ class IndexReader:
         self.doc_count = m.doc_count
         self.sum_dl = m.sum_dl
         self.avgdl = self.sum_dl / self.doc_count if self.doc_count else 0.0
-        # Similarity (IndexSearcher.setSimilarity): norms on disk are
-        # the SAME SmallFloat length byte either way; only the norm
-        # cache and the leaf score function differ
+        # Similarity (IndexSearcher.setSimilarity), chosen once: norms on
+        # disk are the SAME SmallFloat length byte either way; the norm
+        # cache, leaf score function, term weight (df, boost) and
+        # multi-term weight (dfs, boost) of Phrase/MultiPhrase/SpanOr
+        # (boost * Σ idf over allTermStats) differ
+        n = self.doc_count
         if similarity == "classic":
-            from ..functions.tfidf import classic_norm_table, classic_score_tf
+            from ..functions.tfidf import (classic_norm_table, classic_phrase_weight,
+                                           classic_score_tf, classic_term_weight)
 
             self.cache = classic_norm_table()
             self._score_fn = classic_score_tf
+            self._term_weight = lambda df, boost: classic_term_weight(df, n, boost)
+            self._multi_weight = lambda dfs, boost: classic_phrase_weight(dfs, n, boost)
         elif similarity == "bm25":
             self.cache = norm_cache(self.avgdl)
             self._score_fn = score_tf
+            self._term_weight = lambda df, boost: term_weight(df, n, boost)
+            self._multi_weight = lambda dfs, boost: np.float32(
+                boost * sum(idf_fn(df, n) for df in dfs))
         else:
             raise ValueError(f"similarity must be bm25|classic, got {similarity!r}")
         self.similarity = similarity
@@ -719,7 +699,6 @@ class IndexReader:
         self._seg_files_cache: Optional[Dict[int, List[int]]] = None
         from collections import OrderedDict
 
-        self._cache_stats = cache_stats
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
 
     # -- stats (the createWeight global-stats job): one pushdown-pruned
@@ -731,15 +710,12 @@ class IndexReader:
             return {}
         out: Dict[str, int] = {}
         missing: List[str] = []
-        if self._cache_stats:
-            for t in terms:
-                if t in self._df_lru:
-                    self._df_lru.move_to_end(t)
-                    out[t] = self._df_lru[t]
-                else:
-                    missing.append(t)
-        else:
-            missing = terms
+        for t in terms:
+            if t in self._df_lru:
+                self._df_lru.move_to_end(t)
+                out[t] = self._df_lru[t]
+            else:
+                missing.append(t)
         if missing:
             rows = (
                 self._filtered_postings(missing)
@@ -751,10 +727,9 @@ class IndexReader:
             for t in missing:
                 df = found.get(t, 0)
                 out[t] = df
-                if self._cache_stats:
-                    self._df_lru[t] = df
-                    if len(self._df_lru) > STATS_CACHE_MAX_TERMS:
-                        self._df_lru.popitem(last=False)
+                self._df_lru[t] = df
+                if len(self._df_lru) > STATS_CACHE_MAX_TERMS:
+                    self._df_lru.popitem(last=False)
         return {t: v for t, v in out.items() if v > 0}
 
     def _filtered_postings(self, terms: List[str]) -> DataFrame:
@@ -763,88 +738,23 @@ class IndexReader:
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def _weights(self, q: Query, classic_k1p1: bool = False):
-        terms = [t for _, t in query_terms(q)]
-        dfs = self.global_dfs(terms)
+    def _weights(self, q: Query):
+        """-> (term weights keyed (term, boost), multi-term weights keyed
+        by their Phrase/MultiPhrase/SpanOr node), in leaf walk order —
+        the engine's float32 summation order, which explain replays."""
+        dfs = self.global_dfs([t for _, t in query_terms(q)])
         weights: Dict[Tuple[str, float], np.float32] = {}
-        phrase_weights: Dict[Tuple[str, ...], np.float32] = {}
-        if self.similarity == "classic":
-            from ..functions.tfidf import classic_term_weight
-
-            def _tw(df, boost):
-                return classic_term_weight(df, self.doc_count, boost)
-        else:
-            def _tw(df, boost):
-                return term_weight(df, self.doc_count, boost, classic_k1p1)
-
-        def walk(node: Query):
-            if isinstance(node, (TermQuery, SpanFirstQuery, SpanNotQuery)):
+        phrase_weights: Dict[Query, np.float32] = {}
+        for node in leaves(q):
+            if isinstance(node, (PhraseQuery, MultiPhraseQuery, SpanOrQuery)):
+                phrase_weights[node] = self._multi_weight(
+                    [dfs.get(t, 0) for t in node_terms(node)], node.boost)
+            elif isinstance(node, (TermQuery, SpanFirstQuery, SpanNotQuery)):
                 # SpanNot scores with the INCLUDE term's stats only
                 # (exclude weight is COMPLETE_NO_SCORES)
                 if node.term in dfs:
-                    weights.setdefault(
-                        (node.term, node.boost),
-                        _tw(dfs[node.term], node.boost),
-                    )
-            elif isinstance(node, SpanOrQuery):
-                # SpanOrWeight: one simWeight over EVERY clause term
-                # (allTermStats), boost folded like MultiPhraseWeight
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[("__or__",) + node.terms] = \
-                        classic_phrase_weight(
-                            [dfs.get(t, 0) for t in node.terms],
-                            self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count)
-                        for t in node.terms)
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[("__or__",) + node.terms] = np.float32(w)
-            elif isinstance(node, ConstantScoreQuery):
-                walk(node.query)
-            elif isinstance(node, DisjunctionMaxQuery):
-                for c in node.clauses:
-                    walk(c)
-            elif isinstance(node, PhraseQuery):
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[node.terms] = classic_phrase_weight(
-                        [dfs.get(t, 0) for t in node.terms],
-                        self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count) for t in node.terms
-                    )
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[node.terms] = np.float32(w)
-            elif isinstance(node, MultiPhraseQuery):
-                flat = tuple(t for slot in node.slots for t in slot)
-                # MultiPhraseWeight: idf summed over EVERY alternative
-                # (allTermStats), boost folded like PhraseQuery
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[("__mp__",) + flat] = \
-                        classic_phrase_weight(
-                            [dfs.get(t, 0) for t in flat],
-                            self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count)
-                        for t in flat)
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[("__mp__",) + flat] = np.float32(w)
-            elif isinstance(node, BooleanQuery):
-                for c in node.should + node.must + node.must_not:
-                    walk(c)
-
-        walk(q)
+                    weights.setdefault((node.term, node.boost),
+                                       self._term_weight(dfs[node.term], node.boost))
         return weights, phrase_weights
 
     # -- multi-term expansion (`[U] .../search/MultiTermQuery.java ::
@@ -852,6 +762,9 @@ class IndexReader:
     # over the postings parquet; only matching TERMS (not postings)
     # reach the driver.
     def _expand(self, q: Query) -> Query:
+        return map_leaves(q, self._expand_leaf)
+
+    def _expand_leaf(self, q: Query) -> Query:
         if isinstance(q, MultiTermQuery):
             if (q.kind == "wildcard" and q.pattern[:1] in ("*", "?")
                     and self.manifest.analyzer == "reversed_wildcard"):
@@ -886,18 +799,6 @@ class IndexReader:
                 for p in q.parts
             )
             return MultiPhraseQuery(slots, q.field, q.boost)
-        if isinstance(q, ConstantScoreQuery):
-            return ConstantScoreQuery(self._expand(q.query), q.boost)
-        if isinstance(q, DisjunctionMaxQuery):
-            return DisjunctionMaxQuery(
-                tuple(self._expand(c) for c in q.clauses), q.tiebreak)
-        if isinstance(q, BooleanQuery):
-            return BooleanQuery(
-                should=tuple(self._expand(c) for c in q.should),
-                must=tuple(self._expand(c) for c in q.must),
-                must_not=tuple(self._expand(c) for c in q.must_not),
-                min_should_match=q.min_should_match,
-            )
         return q
 
     def _multiterm_cond(self, mq: MultiTermQuery):
@@ -909,8 +810,7 @@ class IndexReader:
             # pushdown only) — never evaluate the user pattern in the
             # Java regex dialect; the kernel's Python predicate is the
             # single source of match truth (ADVICE r1: dialect
-            # divergence silently dropped matches, and results differed
-            # between the cache_stats and fallback paths)
+            # divergence silently dropped matches)
             from ..plans.query import scan_prefix
 
             pre = scan_prefix(mq)
@@ -956,6 +856,24 @@ class IndexReader:
         return [t for t in (r["term"] for r in rows) if pred(t)]
 
     # -- search
+    def _prepare(self, query: str | Query, analyzer: Optional[str] = None) -> Query:
+        """parse (strings only) -> expand multiterms -> rewrite."""
+        q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
+            if isinstance(query, str) else query
+        return rewrite(self._expand(q))
+
+    def _candidates(self, q: Query, k: int, prune: str) -> DataFrame:
+        """Per-segment (seg, doc_id, score, seg_hits) rows that the global
+        top-k is taken from, tombstones already removed. Over
+        DELETED_DRIVER_CAP the kernel cannot mask: score every match
+        (delete-blind, so seg_hits counts deleted docs too) and anti-join
+        the distributed delete set BEFORE any top-k — masking after a
+        per-segment top-k would let deleted docs crowd out live ones."""
+        if not self.deletes_over_cap:
+            return self._per_segment(q, k, prune)
+        return (self._per_segment(q, k=1 << 62, prune="exhaustive")
+                .join(self._deleted_df(), "doc_id", "left_anti"))
+
     def search(self, query: str | Query, k: int = 10, prune: str = "maxscore",
                analyzer: Optional[str] = None) -> DataFrame:
         """-> DataFrame(doc_id long, score float), globally ranked top-k.
@@ -963,71 +881,34 @@ class IndexReader:
         Two-phase: per-segment top-k in the kernel, global merge via
         orderBy(score desc, doc_id asc).limit(k) (TakeOrderedAndProject).
         """
-        q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
-            if isinstance(query, str) else query
-        q = rewrite(self._expand(q))
-        if self.deletes_over_cap:
-            # huge tombstone set: score every match (delete-blind
-            # kernel), anti-join the distributed delete set, THEN take
-            # the global top-k — masking after a per-segment top-k
-            # would let deleted docs crowd out live ones
-            live = self._per_segment(q, k=1 << 62, prune="exhaustive") \
-                .select("doc_id", "score") \
-                .join(self._deleted_df(), "doc_id", "left_anti")
-            return (live.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k).select("doc_id", "score"))
-        per_seg = self._per_segment(q, k, prune)
-        return (
-            per_seg.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
-        )
+        return (self._candidates(self._prepare(query, analyzer), k, prune)
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(k).select("doc_id", "score"))
 
     def score_all(self, query: str | Query, analyzer: Optional[str] = None) -> DataFrame:
         """-> DataFrame(doc_id, score) for EVERY matching doc (no top-k
         truncation) — the per-field scorer edismax composes across
         field indexes (operators/edismax.py). Shuffle carries
         (doc_id, float32) pairs only."""
-        q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
-            if isinstance(query, str) else query
-        q = rewrite(self._expand(q))
-        per_seg = self._per_segment(q, k=1 << 62, prune="exhaustive")
-        out = per_seg.select("doc_id", "score")
-        if self.deletes_over_cap:
-            out = out.join(self._deleted_df(), "doc_id", "left_anti")
-        return out
+        return self._candidates(self._prepare(query, analyzer), 1 << 62,
+                                "exhaustive").select("doc_id", "score")
 
     def search_with_total(self, query: str | Query, k: int = 10,
                           prune: str = "maxscore") -> Tuple[List[Tuple[int, float]], int]:
         """TopDocs equivalent: ([(doc_id, score)], exact total_hits)."""
-        q = parse_query(query, analyzer=self.manifest.analyzer) if isinstance(query, str) else query
-        q = rewrite(self._expand(q))
-        if self.deletes_over_cap:
-            live = (self._per_segment(q, k=1 << 62, prune="exhaustive")
-                    .select("doc_id", "score")
-                    .join(self._deleted_df(), "doc_id", "left_anti").cache())
-            try:
-                top = (live.orderBy(F.desc("score"), F.asc("doc_id"))
-                       .limit(k).collect())
-                total = live.count()
-                return [(int(r["doc_id"]), float(r["score"])) for r in top], total
-            finally:
-                live.unpersist()
-        per_seg = self._per_segment(q, k, prune).cache()
+        cands = self._candidates(self._prepare(query), k, prune).cache()
         try:
-            top = (
-                per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                .select("doc_id", "score").collect()
-            )
-            hits_row = (
-                per_seg.select("seg", "seg_hits").groupBy("seg")
-                .agg(F.first("seg_hits").alias("h"))
-                .agg(F.sum("h").alias("total")).collect()
-            )
-            total = int(hits_row[0]["total"] or 0)
+            top = (cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                   .select("doc_id", "score").collect())
+            if self.deletes_over_cap:
+                total = cands.count()  # every live match is a row
+            else:
+                total = int(cands.select("seg", "seg_hits").groupBy("seg")
+                            .agg(F.first("seg_hits").alias("h"))
+                            .agg(F.sum("h").alias("total")).collect()[0]["total"] or 0)
             return [(int(r["doc_id"]), float(r["score"])) for r in top], total
         finally:
-            per_seg.unpersist()
+            cands.unpersist()
 
     def _per_segment(self, q: Query, k: int, prune: str) -> DataFrame:
         terms = [t for _, t in query_terms(q)]
@@ -1183,10 +1064,7 @@ class IndexReader:
         Driver-side arithmetic over two pushdown-pruned lookups (the
         query terms' stats and the one doc's docmeta row) — explain is
         a debugging surface, never a hot path."""
-        q = parse_query(query, analyzer=self.manifest.analyzer) \
-            if isinstance(query, str) else query
-        q = rewrite(self._expand(q))
-        weights, _ = self._weights(q)
+        weights, _ = self._weights(self._prepare(query))
         row = self.docmeta.filter(F.col("doc_id") == doc_id) \
             .select("norm_byte").collect()
         if not row:
@@ -1284,19 +1162,8 @@ class IndexReader:
     def more_like_this_query(self, text: str, max_query_terms: int = 25,
                              min_doc_freq: int = 2,
                              min_term_freq: int = 1) -> Query:
-        from collections import Counter
-
-        from ..analysis import tokenize
-
-        tf = Counter(tokenize(text, self.manifest.analyzer))
-        dfs = self.global_dfs([t for t, c in tf.items() if c >= min_term_freq])
-        scored = [
-            (c * float(idf_fn(dfs[t], self.doc_count)), t)
-            for t, c in tf.items()
-            if t in dfs and dfs[t] >= min_doc_freq and c >= min_term_freq
-        ]
-        scored.sort(key=lambda x: (-x[0], x[1]))
-        chosen = sorted(t for _, t in scored[:max_query_terms])
+        chosen = sorted(t for t, _ in self.more_like_this_terms(
+            text, max_query_terms, min_doc_freq, min_term_freq))
         if not chosen:
             return BooleanQuery()
         return rewrite(BooleanQuery(should=tuple(TermQuery(t) for t in chosen)))
@@ -1310,8 +1177,8 @@ class IndexReader:
         """MLT ``interestingTerms=details`` (`[U] lucene/queries/.../mlt/
         MoreLikeThis.java :: retrieveInterestingTerms`): the selected
         query terms with their tf*idf selection scores, ranked
-        (score desc, term asc) — same selection as
-        more_like_this_query, float64 like its sort key."""
+        (score desc, term asc), float64 — the selection
+        more_like_this_query builds its disjunction from."""
         from collections import Counter
 
         from ..analysis import tokenize
@@ -1480,34 +1347,19 @@ class IndexReader:
             "pos long, first string, second string, combined string, df long")
 
 
+#: the query nodes that read the pos blobs
+POSITIONAL = (PhraseQuery, MultiPhraseQuery, SpanFirstQuery, SpanNotQuery)
+
+
 def _needs_positions(q: Query) -> bool:
-    """True when the tree holds a position-consuming node — phrases
-    and the SpanFirst/SpanNot filters — so the pos blobs (the bulkiest
-    postings column) must ship with the scan. SpanOr is deliberately
-    absent: it counts spans from tfs alone."""
-    if isinstance(q, (PhraseQuery, MultiPhraseQuery,
-                      SpanFirstQuery, SpanNotQuery)):
-        return True
-    if isinstance(q, ConstantScoreQuery):
-        return _needs_positions(q.query)
-    if isinstance(q, DisjunctionMaxQuery):
-        return any(_needs_positions(c) for c in q.clauses)
-    if isinstance(q, BooleanQuery):
-        return any(_needs_positions(c)
-                   for c in q.should + q.must + q.must_not)
-    return False
+    """True when the tree holds a POSITIONAL node, so the pos blobs (the
+    bulkiest postings column) must ship with the scan. SpanOr is
+    deliberately absent: it counts spans from tfs alone."""
+    return any(isinstance(n, POSITIONAL) for n in leaves(q))
 
 
 def _contains_matchall(q: Query) -> bool:
-    if isinstance(q, MatchAllQuery):
-        return True
-    if isinstance(q, ConstantScoreQuery):
-        return _contains_matchall(q.query)
-    if isinstance(q, DisjunctionMaxQuery):
-        return any(_contains_matchall(c) for c in q.clauses)
-    if isinstance(q, BooleanQuery):
-        return any(_contains_matchall(c) for c in q.should + q.must + q.must_not)
-    return False
+    return any(isinstance(n, MatchAllQuery) for n in leaves(q))
 
 
 def infix_suggest(df: DataFrame, text_col: str, weight_col: str,

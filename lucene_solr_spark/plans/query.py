@@ -26,8 +26,8 @@ and the test oracle:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
-from typing import List, Tuple, Union
+from dataclasses import dataclass, field, replace
+from typing import Callable, Iterator, List, Tuple, Union
 
 from ..analysis import tokenize, tokenize_for_phrase
 
@@ -50,6 +50,9 @@ __all__ = [
     "parse_query",
     "rewrite",
     "query_terms",
+    "leaves",
+    "map_leaves",
+    "node_terms",
     "expand_multiterm",
     "scan_predicates",
     "sloppy_phrase_freq",
@@ -441,22 +444,7 @@ def parse_complex_phrase(body: str, field: str = DEFAULT_FIELD,
 def scan_predicates(q: "Query") -> List[MultiTermQuery]:
     """Constant-score MultiTermQuery nodes remaining in the tree (their
     term-dict predicates must be OR'd into the postings scan filter)."""
-    out: List[MultiTermQuery] = []
-
-    def walk(node):
-        if isinstance(node, MultiTermQuery):
-            out.append(node)
-        elif isinstance(node, ConstantScoreQuery):
-            walk(node.query)
-        elif isinstance(node, DisjunctionMaxQuery):
-            for c in node.clauses:
-                walk(c)
-        elif isinstance(node, BooleanQuery):
-            for c in node.should + node.must + node.must_not:
-                walk(c)
-
-    walk(q)
-    return out
+    return [n for n in leaves(q) if isinstance(n, MultiTermQuery)]
 
 
 # ---------------------------------------------------------------- parser
@@ -778,47 +766,67 @@ def rewrite(q: Query) -> Query:
                         min_should_match=q.min_should_match)
 
 
+# ------------------------------------------------------------- traversal
+
+#: compound node type -> its child fields, in walk order (should + must +
+#: must_not for BooleanQuery). The ONE place that knows which nodes have
+#: children; every tree walk but ``rewrite`` and the parser goes through
+#: ``leaves`` / ``map_leaves``.
+_CHILDREN = {
+    BooleanQuery: ("should", "must", "must_not"),
+    DisjunctionMaxQuery: ("clauses",),
+    ConstantScoreQuery: ("query",),
+}
+
+
+def leaves(q: Query) -> Iterator[Query]:
+    """Leaf (non-compound) nodes of ``q``, depth-first in walk order."""
+    fields = _CHILDREN.get(type(q))
+    if fields is None:
+        yield q
+        return
+    for f in fields:
+        v = getattr(q, f)
+        for c in (v if type(v) is tuple else (v,)):
+            yield from leaves(c)
+
+
+def map_leaves(q: Query, fn: Callable[[Query], Query]) -> Query:
+    """Rebuild ``q`` with every leaf replaced by ``fn(leaf)``; compound
+    nodes keep their own fields (boost, tiebreak, min_should_match)."""
+    fields = _CHILDREN.get(type(q))
+    if fields is None:
+        return fn(q)
+
+    def sub(v):
+        if type(v) is tuple:
+            return tuple(map_leaves(c, fn) for c in v)
+        return map_leaves(v, fn)
+
+    return replace(q, **{f: sub(getattr(q, f)) for f in fields})
+
+
+def node_terms(q: Query) -> Tuple[str, ...]:
+    """Terms one leaf node reads, in order, repeats kept (a multi-term
+    weight sums one idf per occurrence). SpanNot's exclude term carries
+    no score but its postings must reach the kernel (position veto)."""
+    if isinstance(q, (TermQuery, SpanFirstQuery)):
+        return (q.term,)
+    if isinstance(q, SpanNotQuery):
+        return (q.term, q.exclude)
+    if isinstance(q, (PhraseQuery, SpanOrQuery)):
+        return q.terms
+    if isinstance(q, MultiPhraseQuery):
+        return tuple(t for slot in q.slots for t in slot)
+    if isinstance(q, MultiTermQuery) and q.kind == "fuzzy":
+        raise ValueError("fuzzy MultiTermQuery must be expanded "
+                         "before stats (IndexReader._expand)")
+    return ()  # constant-score multiterm kinds carry no scored terms
+
+
 def query_terms(q: Query) -> List[Tuple[str, str]]:
     """All (field, term) pairs referenced by a query, in stable
     first-appearance order (this order defines float32 summation order
     in both engine and oracle)."""
-    out: List[Tuple[str, str]] = []
-
-    def walk(node: Query):
-        if isinstance(node, TermQuery):
-            out.append((node.field, node.term))
-        elif isinstance(node, SpanFirstQuery):
-            out.append((node.field, node.term))
-        elif isinstance(node, SpanOrQuery):
-            out.extend((node.field, t) for t in node.terms)
-        elif isinstance(node, SpanNotQuery):
-            # the exclude term carries no score but its postings must
-            # reach the kernel (position veto)
-            out.append((node.field, node.term))
-            out.append((node.field, node.exclude))
-        elif isinstance(node, PhraseQuery):
-            out.extend((node.field, t) for t in node.terms)
-        elif isinstance(node, MultiPhraseQuery):
-            out.extend((node.field, t)
-                       for slot in node.slots for t in slot)
-        elif isinstance(node, ConstantScoreQuery):
-            walk(node.query)
-        elif isinstance(node, DisjunctionMaxQuery):
-            for c in node.clauses:
-                walk(c)
-        elif isinstance(node, MultiTermQuery):
-            if node.kind == "fuzzy":
-                raise ValueError("fuzzy MultiTermQuery must be expanded "
-                                 "before stats (IndexReader._expand)")
-            # constant-score kinds carry no scored terms
-        elif isinstance(node, BooleanQuery):
-            for c in node.should + node.must + node.must_not:
-                walk(c)
-
-    walk(q)
-    seen, uniq = set(), []
-    for ft in out:
-        if ft not in seen:
-            seen.add(ft)
-            uniq.append(ft)
-    return uniq
+    return list(dict.fromkeys(
+        (n.field, t) for n in leaves(q) for t in node_terms(n)))

@@ -89,6 +89,26 @@ def test_more_like_this(reader):
     assert 1 <= len(q.should) <= 25
 
 
+def test_more_like_this_terms(reader):
+    """interestingTerms=details: ranked (tf*idf desc, term asc), the
+    same terms more_like_this_query turns into its disjunction."""
+    from collections import Counter
+
+    from lucene_solr_spark.analysis import tokenize
+    from lucene_solr_spark.functions.bm25 import idf
+
+    idx, corpus = reader
+    seed = corpus.filter(F.col("doc_id") == 7).collect()[0]["content"]
+    terms = idx.more_like_this_terms(seed, max_query_terms=10)
+    assert 1 <= len(terms) <= 10
+    assert terms == sorted(terms, key=lambda ts: (-ts[1], ts[0]))
+    tf = Counter(tokenize(seed, idx.manifest.analyzer))
+    for t, sc in terms:
+        assert sc == tf[t] * idf(idx.docfreq(t), idx.doc_count), t
+    q = idx.more_like_this_query(seed, max_query_terms=10)
+    assert sorted(t for t, _ in terms) == [c.term for c in getattr(q, "should", (q,))]
+
+
 def test_suggest(reader):
     idx, _ = reader
     sugg = idx.suggest("s", n=5)

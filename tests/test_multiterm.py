@@ -32,6 +32,8 @@ QUERIES = [
     "spark^2 OR merge",
     'merge AND spark*',
     '"batch batch"^3 OR spark',
+    # same phrase twice, different boosts: each keeps its own weight
+    '"batch batch"^3 OR "batch batch"',
     "spark* AND NOT merge",
 ]
 

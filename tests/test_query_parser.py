@@ -4,9 +4,13 @@ import numpy as np
 
 from lucene_solr_spark.plans.query import (
     BooleanQuery,
+    ConstantScoreQuery,
+    DisjunctionMaxQuery,
     MatchAllQuery,
     PhraseQuery,
     TermQuery,
+    leaves,
+    map_leaves,
     parse_query,
     query_terms,
 )
@@ -71,6 +75,20 @@ def test_field_scoping():
 def test_query_terms_order():
     q = parse_query("b AND a OR c")
     assert [t for _, t in query_terms(q)] == ["b", "a", "c"]
+
+
+def test_leaves_and_map_leaves():
+    """should + must + must_not order through every compound node, and
+    a rebuild keeps min_should_match, tiebreak and boost."""
+    a, b, c, d, e = (TermQuery(t) for t in "abcde")
+    q = BooleanQuery(should=(DisjunctionMaxQuery((a, b), 0.3),),
+                     must=(ConstantScoreQuery(c, 2.0), d), must_not=(e,),
+                     min_should_match=1)
+    assert list(leaves(q)) == [a, b, c, d, e]
+    up = map_leaves(q, lambda n: TermQuery(n.term.upper(), boost=n.boost))
+    assert [n.term for n in leaves(up)] == list("ABCDE")
+    assert up.min_should_match == 1 and up.should[0].tiebreak == 0.3
+    assert up.must[0].boost == 2.0
 
 
 # ------------------------------------------------------- oracle sanity
