@@ -7,6 +7,10 @@ JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+``$SPARK_GRAFT_CPUS`` defaults to the usable CPUs and the driver heap
+(``$SPARK_GRAFT_DRIVER_MEM``) to the size perfbench/machine.py picks
+from RAM.
+
 Timed sections:
   * ``index_build``       — full inverted-index build (tokenize -> segment
     kernels -> manifest commit); docs/sec reported in extras.
@@ -39,7 +43,9 @@ def _sf_of(sf_dir: str) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from perfbench.machine import cpus as usable_cpus, heap_gb_for, ram_bytes
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus())
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "")
 
     from pyspark.sql import SparkSession
@@ -48,7 +54,8 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("lucene-solr-spark-bench")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{heap_gb_for(ram_bytes())}g"))
         .config("spark.sql.shuffle.partitions", str(max(8, cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

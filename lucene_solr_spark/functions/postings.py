@@ -1,7 +1,8 @@
-"""Flat posting-row codec (index format v3).
+"""Flat posting-row decoder (index format v3).
 
-One parquet row per (term, seg, shard) holds the WHOLE posting list as
-four binary blobs plus parallel per-block metadata arrays:
+One parquet row per (term, seg, shard) holds the WHOLE posting list (or
+one block-aligned shard of it) as four binary blobs plus parallel
+per-block metadata arrays:
 
     docs binary   -- varint doc-id deltas; value at each 128-block start
                      is the ABSOLUTE doc id (block-local decode possible)
@@ -15,100 +16,48 @@ four binary blobs plus parallel per-block metadata arrays:
     blk_doc_off/blk_tf_off/blk_pos_off -- byte offsets of each block
                      inside the blobs (the skip pointers)
 
-vs. the v2 nested ``blocks array<struct<...>>``: flat blobs encode in
-ONE vectorized varint pass per segment (no per-block numpy-call
-overhead) and ship through Arrow as plain byte arrays instead of a
-million tiny structs. Query-side block skipping slices the blob at
-``blk_*_off`` — same random access as v2, far cheaper to produce.
+Rows are written by ONE encoder, ``operators.build.encode_posting_rows``
+(used by both the build flush and the merge re-block); every doc-id
+decode goes through ``decode_docs_concat`` here. Query-side block
+skipping slices the blob at ``blk_*_off``.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence
+from typing import List, Sequence
 
 import numpy as np
 
-from .varint import decode_varint, encode_varint_with_lengths
-
-BLOCK_SIZE = 128
-
-FLAT_BLOCK_COLS = [
-    "blk_first", "blk_last", "blk_n", "blk_max_tf", "blk_min_norm",
-    "blk_doc_off", "blk_tf_off", "blk_pos_off",
-]
-FLAT_BLOB_COLS = ["docs", "tfs", "pos", "norms"]
+from .varint import decode_varint
 
 
-# ----------------------------------------------------------------- encode
+def _segmented_cumsum(deltas: np.ndarray, seg_lens: np.ndarray) -> np.ndarray:
+    """cumsum of ``deltas`` restarting at every segment start (the value
+    at a segment start is absolute)."""
+    c = np.cumsum(deltas)
+    corr = np.zeros(len(seg_lens), dtype=np.int64)
+    corr[1:] = c[np.cumsum(seg_lens)[:-1] - 1]
+    return c - np.repeat(corr, seg_lens)
 
 
-def encode_posting_list(docs: np.ndarray, tfs: np.ndarray, norms: np.ndarray,
-                        pos_deltas: np.ndarray, pos_bounds: np.ndarray) -> Dict[str, object]:
-    """Encode ONE term's (shard's) posting list -> flat column dict.
-
-    ``pos_deltas``: concatenated per-doc position deltas (absolute at
-    each doc start); ``pos_bounds[i]`` = cumulative position count after
-    posting i. Used by the merge path; the build kernel encodes whole
-    segments at once and slices instead (see build.make_unified_kernel).
-    """
-    n = len(docs)
-    block_starts = np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
-    block_ends = np.minimum(block_starts + BLOCK_SIZE, n)
-
-    ddel = np.empty(n, dtype=np.int64)
-    ddel[0] = docs[0]
-    np.subtract(docs[1:], docs[:-1], out=ddel[1:])
-    ddel[block_starts] = docs[block_starts]
-
-    docs_buf, dlen = encode_varint_with_lengths(ddel)
-    tfs_buf, tlen = encode_varint_with_lengths(tfs)
-    pos_buf, plen = encode_varint_with_lengths(pos_deltas)
-    dboff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(dlen, out=dboff[1:])
-    tboff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tlen, out=tboff[1:])
-    pboff = np.zeros(len(pos_deltas) + 1, dtype=np.int64)
-    if len(pos_deltas):
-        np.cumsum(plen, out=pboff[1:])
-    pos_excl = np.zeros(n, dtype=np.int64)
-    pos_excl[1:] = pos_bounds[:-1]
-
-    return {
-        "blk_first": docs[block_starts].tolist(),
-        "blk_last": docs[block_ends - 1].tolist(),
-        "blk_n": (block_ends - block_starts).astype(np.int32).tolist(),
-        "blk_max_tf": np.maximum.reduceat(tfs, block_starts).astype(np.int32).tolist(),
-        "blk_min_norm": np.minimum.reduceat(norms, block_starts).astype(np.int32).tolist(),
-        "blk_doc_off": dboff[block_starts].astype(np.int32).tolist(),
-        "blk_tf_off": tboff[block_starts].astype(np.int32).tolist(),
-        "blk_pos_off": pboff[pos_excl[block_starts]].astype(np.int32).tolist(),
-        "docs": docs_buf,
-        "tfs": tfs_buf,
-        "pos": pos_buf,
-        "norms": norms.astype(np.uint8).tobytes(),
-    }
-
-
-# ----------------------------------------------------------------- decode
-
-
-def _as_int_array(v) -> np.ndarray:
-    return np.asarray(v, dtype=np.int64)
+def decode_docs_concat(docs_blobs: Sequence[bytes], blk_ns: Sequence) -> np.ndarray:
+    """Doc ids of MANY posting rows in ONE varint pass. Each row's doc
+    stream starts with an absolute value at a block boundary, so the
+    concatenated stream is a valid block-reset delta stream; per-call
+    decode overhead would otherwise dominate wildcard queries and merge
+    groups spanning thousands of rows."""
+    if not len(docs_blobs):
+        return np.empty(0, np.int64)
+    d = decode_varint(b"".join(docs_blobs))
+    if d.size == 0:
+        return d
+    blk_n = np.concatenate([np.asarray(n, dtype=np.int64) for n in blk_ns])
+    return _segmented_cumsum(d, blk_n)
 
 
 def decode_docs(row) -> np.ndarray:
-    """Whole-list doc ids: segmented cumsum with absolute resets at
-    block starts."""
-    d = decode_varint(row["docs"])
-    if d.size == 0:
-        return d
-    blk_n = _as_int_array(row["blk_n"])
-    starts = np.zeros(len(blk_n), dtype=np.int64)
-    starts[1:] = np.cumsum(blk_n)[:-1]
-    c = np.cumsum(d)
-    corr = np.zeros(len(blk_n), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, blk_n)
+    """Whole-list doc ids of one row."""
+    return decode_docs_concat([row["docs"]], [row["blk_n"]])
 
 
 def decode_tfs(row) -> np.ndarray:
@@ -125,12 +74,7 @@ def decode_positions_concat(row, tfs: np.ndarray) -> np.ndarray:
     deltas = decode_varint(row["pos"])
     if deltas.size == 0:
         return deltas
-    starts = np.zeros(len(tfs), dtype=np.int64)
-    starts[1:] = np.cumsum(tfs)[:-1]
-    c = np.cumsum(deltas)
-    corr = np.zeros(len(tfs), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, tfs)
+    return _segmented_cumsum(deltas, tfs)
 
 
 def split_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> List[np.ndarray]:
@@ -142,7 +86,7 @@ def split_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> List[np.ndarray]
 
 def decode_block_docs(row, i: int) -> np.ndarray:
     """Decode ONLY block i's doc ids (for WAND block skipping)."""
-    off = _as_int_array(row["blk_doc_off"])
+    off = np.asarray(row["blk_doc_off"], dtype=np.int64)
     end = off[i + 1] if i + 1 < len(off) else len(row["docs"])
     d = decode_varint(row["docs"][off[i]:end])
     return np.cumsum(d)  # first value is absolute by construction

@@ -98,6 +98,102 @@ def _postings_pa_schema():
     ])
 
 
+def _offsets(lengths: np.ndarray) -> np.ndarray:
+    """Item lengths -> start offsets with the total appended (n + 1)."""
+    off = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=off[1:])
+    return off
+
+
+def _cut(starts: np.ndarray, ends: np.ndarray, step: int):
+    """Cut every range [starts[i], ends[i]) into pieces of ``step`` items
+    -> (owning range per piece, piece starts, piece boundaries per range)."""
+    bounds = _offsets((ends - starts + step - 1) // step)
+    owner = np.repeat(np.arange(len(starts)), np.diff(bounds))
+    return owner, starts[owner] + (np.arange(bounds[-1]) - bounds[owner]) * step, bounds
+
+
+def encode_posting_rows(field_name: str, terms, term_starts: np.ndarray,
+                        docs: np.ndarray, tfs: np.ndarray, norms: np.ndarray,
+                        tfs_buf: bytes, tf_off: np.ndarray,
+                        pos_buf: bytes, pos_off: np.ndarray,
+                        shard_postings: int = DEFAULT_SHARD_POSTINGS):
+    """THE posting-row writer: non-empty postings in (term, doc) order
+    -> v3 rows (``_postings_pa_schema``). Both the build flush and the
+    merge re-block call it, so a merged segment equals a fresh build.
+
+    ``terms[i]`` starts at posting ``term_starts[i]``; ``docs`` / ``tfs``
+    / ``norms`` hold one value per posting; ``tfs_buf`` / ``pos_buf`` are
+    varint streams and ``tf_off`` / ``pos_off`` (n_postings + 1) the
+    byte offset where each posting's values start.
+
+    A term splits into rows (``shard`` 0, 1, ...) of at most
+    ``shard_postings`` postings, rounded UP to a multiple of BLOCK_SIZE
+    so row cuts are block cuts. Doc deltas are varint-encoded with an
+    absolute value at every 128-doc block start; the binary columns are
+    zero-copy slices of the stream buffers via Arrow offsets.
+    """
+    import pyarrow as pa
+
+    n_post = len(docs)
+    shard_postings = max(BLOCK_SIZE, -(-shard_postings // BLOCK_SIZE) * BLOCK_SIZE)
+    term_ends = np.append(term_starts[1:], n_post)
+    row_term, row_starts, term_rows = _cut(term_starts, term_ends, shard_postings)
+    row_ends = np.minimum(row_starts + shard_postings, term_ends[row_term])
+    blk_row, b_starts, blk_bounds = _cut(row_starts, row_ends, BLOCK_SIZE)
+    b_ends = np.minimum(b_starts + BLOCK_SIZE, row_ends[blk_row])
+    row_bounds = np.append(row_starts, n_post)
+
+    ddel = np.empty(n_post, dtype=np.int64)
+    ddel[0] = docs[0]
+    np.subtract(docs[1:], docs[:-1], out=ddel[1:])
+    ddel[b_starts] = docs[b_starts]
+    docs_buf, dlen = encode_varint_with_lengths(ddel)
+    doc_off = _offsets(dlen)
+
+    blk_offsets = pa.array(blk_bounds.astype(np.int32))
+
+    def blocks(values: np.ndarray, typ):
+        return pa.ListArray.from_arrays(blk_offsets, pa.array(values, typ))
+
+    def block_offsets(byte_off: np.ndarray):
+        return blocks((byte_off[b_starts] - byte_off[row_starts][blk_row])
+                      .astype(np.int32), pa.int32())
+
+    def blobs(buf: bytes, byte_off: np.ndarray):
+        off = np.ascontiguousarray(byte_off[row_bounds], dtype=np.int32)
+        return pa.Array.from_buffers(
+            pa.binary(), len(off) - 1,
+            [None, pa.py_buffer(off.tobytes()), pa.py_buffer(buf)])
+
+    n_rows = len(row_starts)
+    buckets = np.fromiter((_term_bucket_py(t) for t in terms),
+                          dtype=np.int32, count=len(term_starts))
+    return pa.table({
+        "field": pa.repeat(field_name, n_rows).cast(pa.string()),
+        "term": pa.array(terms, pa.string()).take(row_term),
+        "term_bucket": pa.array(buckets[row_term], pa.int32()),
+        "shard": pa.array((np.arange(n_rows) - term_rows[row_term]).astype(np.int32)),
+        "df": pa.array((row_ends - row_starts).astype(np.int32)),
+        "cum_tf": pa.array(np.add.reduceat(tfs, row_starts), pa.int64()),
+        "max_tf": pa.array(np.maximum.reduceat(tfs, row_starts).astype(np.int32)),
+        "min_norm": pa.array(np.minimum.reduceat(norms, row_starts).astype(np.int32)),
+        "blk_first": blocks(docs[b_starts], pa.int64()),
+        "blk_last": blocks(docs[b_ends - 1], pa.int64()),
+        "blk_n": blocks((b_ends - b_starts).astype(np.int32), pa.int32()),
+        "blk_max_tf": blocks(np.maximum.reduceat(tfs, b_starts).astype(np.int32), pa.int32()),
+        "blk_min_norm": blocks(np.minimum.reduceat(norms, b_starts).astype(np.int32),
+                               pa.int32()),
+        "blk_doc_off": block_offsets(doc_off),
+        "blk_tf_off": block_offsets(tf_off),
+        "blk_pos_off": block_offsets(pos_off),
+        "docs": blobs(docs_buf, doc_off),
+        "tfs": blobs(tfs_buf, tf_off),
+        "pos": blobs(pos_buf, pos_off),
+        "norms": blobs(norms.astype(np.uint8).tobytes(), np.arange(n_post + 1)),
+    }, schema=_postings_pa_schema())
+
+
 def _atomic_parquet_write(table, dirname: str, row_group_size: int) -> None:
     """tmp write + atomic rename, one file per segment dir. Retried or
     speculative tasks rewrite identical deterministic bytes, so the
@@ -171,19 +267,17 @@ def _seg_term_codes(texts: List[str], analyzer: str):
 
 
 def make_segment_writer(index_dir: str, analyzer: str = "standard",
-                        field_name: str = "content",
-                        shard_postings: int = DEFAULT_SHARD_POSTINGS):
+                        field_name: str = "content"):
     """mapInArrow kernel: a partition of tokenized docs -> segment
     parquet ON DISK + 1 stats row per segment.
 
     Per segment: tokenize (CPython sre, see ``_seg_term_codes``), one
-    lexsort, run-length boundaries, ONE varint pass per stream
-    (docs/tfs/pos), then a fully columnar Arrow table assembly where
-    per-term rows are zero-copy byte SLICES of those three stream
-    buffers (no per-term Python loop). Mirrors the
-    reference's per-term postings write (`[U] .../index/
-    FreqProxTermsWriter.java :: flush`) with the per-block impacts of
-    `Lucene84SkipWriter.java`.
+    lexsort, run-length boundaries, ONE varint pass per tf/pos stream,
+    then ``encode_posting_rows`` lays the blocks and assembles the Arrow
+    rows as zero-copy byte SLICES of the stream buffers (no per-term
+    Python loop). Mirrors the reference's per-term postings write
+    (`[U] .../index/FreqProxTermsWriter.java :: flush`) with the
+    per-block impacts of `Lucene84SkipWriter.java`.
 
     The task writes its own parquet (pyarrow, tmp+rename) exactly like
     a Lucene DWPT flushing segment files, and returns only the
@@ -196,7 +290,7 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
     def process_segment(sub) -> dict:
         seg = sub["seg"][0].as_py()
         doc_ids = sub["doc_id"].to_numpy().astype(np.int64)
-        dls, norm_lens, codes_flat, uniq_list, pos_flat = _seg_term_codes(
+        dls, norm_lens, codes, uniq_list, pos_flat = _seg_term_codes(
             sub[field_name].to_pylist(), analyzer
         )
         norms_by_doc = encode_norms(norm_lens).astype(np.int64)
@@ -210,7 +304,6 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
                 pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(starts, dls)
             else:
                 pos_in_doc = pos_flat  # explicit stream with stopword gaps
-            codes = codes_flat
 
             order = np.lexsort((pos_in_doc, doc_idx, codes))
             c_s, d_s, p_s = codes[order], doc_idx[order], pos_in_doc[order]
@@ -224,7 +317,6 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             tf_all = (run_ends - run_starts).astype(np.int64)
             post_term = c_s[run_starts]            # term code per posting
             post_doc = d_s[run_starts]             # local doc idx per posting
-            n_post = len(post_term)
 
             # position deltas over the sorted stream, absolute at every
             # (term, doc) run start
@@ -233,116 +325,17 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             pos_delta[1:] = p_s[1:] - p_s[:-1]
             pos_delta[run_starts] = p_s[run_starts]
 
-            # term boundaries over the posting stream
-            t_change = np.empty(n_post, dtype=bool)
-            t_change[0] = True
-            t_change[1:] = np.diff(post_term) != 0
-            term_starts = np.flatnonzero(t_change)
-            term_ends = np.append(term_starts[1:], n_post)
-
-            # global 128-doc block grid, aligned to term starts (shard
-            # boundaries are multiples of BLOCK_SIZE so they align too)
-            nb = (term_ends - term_starts + BLOCK_SIZE - 1) // BLOCK_SIZE
-            blk_of_term = np.repeat(np.arange(len(term_starts)), nb)
-            blk_local = np.arange(int(nb.sum()), dtype=np.int64) - \
-                np.repeat(np.cumsum(nb) - nb, nb)
-            block_starts = term_starts[blk_of_term] + blk_local * BLOCK_SIZE
-            block_ends = np.minimum(block_starts + BLOCK_SIZE, term_ends[blk_of_term])
-
-            docs_stream = doc_ids[post_doc]
-            norms_stream = norms_by_doc[post_doc]
-
-            # doc deltas, absolute reset at every block start
-            ddel = np.empty(n_post, dtype=np.int64)
-            ddel[0] = docs_stream[0]
-            np.subtract(docs_stream[1:], docs_stream[:-1], out=ddel[1:])
-            ddel[block_starts] = docs_stream[block_starts]
-
             # ONE varint pass per stream for the whole segment
-            docs_buf, dlen = encode_varint_with_lengths(ddel)
             tfs_buf, tlen = encode_varint_with_lengths(tf_all)
             pos_buf, plen = encode_varint_with_lengths(pos_delta)
-            dboff = np.zeros(n_post + 1, dtype=np.int64)
-            np.cumsum(dlen, out=dboff[1:])
-            tboff = np.zeros(n_post + 1, dtype=np.int64)
-            np.cumsum(tlen, out=tboff[1:])
-            pboff = np.zeros(total + 1, dtype=np.int64)
-            np.cumsum(plen, out=pboff[1:])
-            pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-            pos_excl[1:] = np.cumsum(tf_all)
-
-            # per-block stats (reduceat over the contiguous block grid)
-            blk_first_g = docs_stream[block_starts]
-            blk_last_g = docs_stream[block_ends - 1]
-            blk_n_g = (block_ends - block_starts).astype(np.int32)
-            blk_max_tf_g = np.maximum.reduceat(tf_all, block_starts).astype(np.int32)
-            blk_min_norm_g = np.minimum.reduceat(norms_stream, block_starts).astype(np.int32)
-            blk_boundaries = np.zeros(len(term_starts) + 1, dtype=np.int64)
-            np.cumsum(nb, out=blk_boundaries[1:])
-
-            # per-term cum_tf / max_tf / min_norm via reduceat
-            cum_tf_t = np.add.reduceat(tf_all, term_starts)
-            max_tf_t = np.maximum.reduceat(tf_all, term_starts)
-            min_norm_t = np.minimum.reduceat(norms_stream, term_starts)
-
-            # ---- fully columnar row assembly (no per-term Python loop):
-            # build segments never shard (df <= docs_per_seg << shard
-            # threshold; merge handles sharding), so one row per term and
-            # every array below is a zero-copy view over the stream
-            # buffers via Arrow offsets.
-            n_terms = len(term_starts)
-            t_end_off = np.append(term_starts, n_post)
-
-            def _list_arr(values: np.ndarray, boundaries: np.ndarray, typ):
-                return pa.ListArray.from_arrays(
-                    pa.array(boundaries.astype(np.int32)), pa.array(values, typ))
-
-            def _binary_arr(buf: bytes, value_offsets: np.ndarray):
-                off = np.ascontiguousarray(value_offsets, dtype=np.int32)
-                return pa.Array.from_buffers(
-                    pa.binary(), len(off) - 1,
-                    [None, pa.py_buffer(off.tobytes()), pa.py_buffer(buf)])
-
-            d_lo_blk = dboff[term_starts][blk_of_term]
-            t_lo_blk = tboff[term_starts][blk_of_term]
-            p_lo_blk = pboff[pos_excl[term_starts]][blk_of_term]
-            buckets = np.fromiter(
-                (_term_bucket_py(t) for t in uniq_list), dtype=np.int32, count=n_terms)
-
-            post_table = pa.table({
-                "field": pa.repeat(field_name, n_terms).cast(pa.string()),
-                "term": pa.array(uniq_list, pa.string()),
-                "term_bucket": pa.array(buckets, pa.int32()),
-                "shard": pa.repeat(pa.scalar(0, pa.int32()), n_terms),
-                "df": pa.array((term_ends - term_starts).astype(np.int32), pa.int32()),
-                "cum_tf": pa.array(cum_tf_t, pa.int64()),
-                "max_tf": pa.array(max_tf_t.astype(np.int32), pa.int32()),
-                "min_norm": pa.array(min_norm_t.astype(np.int32), pa.int32()),
-                "blk_first": _list_arr(blk_first_g, blk_boundaries, pa.int64()),
-                "blk_last": _list_arr(blk_last_g, blk_boundaries, pa.int64()),
-                "blk_n": _list_arr(blk_n_g, blk_boundaries, pa.int32()),
-                "blk_max_tf": _list_arr(blk_max_tf_g, blk_boundaries, pa.int32()),
-                "blk_min_norm": _list_arr(blk_min_norm_g, blk_boundaries, pa.int32()),
-                "blk_doc_off": _list_arr(
-                    (dboff[block_starts] - d_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
-                "blk_tf_off": _list_arr(
-                    (tboff[block_starts] - t_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
-                "blk_pos_off": _list_arr(
-                    (pboff[pos_excl[block_starts]] - p_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
-                "docs": _binary_arr(docs_buf, dboff[t_end_off]),
-                "tfs": _binary_arr(tfs_buf, tboff[t_end_off]),
-                "pos": _binary_arr(pos_buf, pboff[pos_excl[t_end_off]]),
-                "norms": _binary_arr(norms_stream.astype(np.uint8).tobytes(),
-                                     t_end_off),
-            }, schema=_postings_pa_schema())
-            seg_n_terms = n_terms
-            seg_n_postings = n_post
+            post_table = encode_posting_rows(
+                field_name, uniq_list,
+                np.flatnonzero(np.r_[True, np.diff(post_term) != 0]),
+                doc_ids[post_doc], tf_all, norms_by_doc[post_doc],
+                tfs_buf, _offsets(tlen), pos_buf, _offsets(plen)[_offsets(tf_all)])
+            seg_n_postings = len(post_term)
         else:
             post_table = _postings_pa_schema().empty_table()
-            seg_n_terms = 0
             seg_n_postings = 0
 
         _atomic_parquet_write(post_table, os.path.join(index_dir, "postings", f"seg={seg}"),
@@ -370,7 +363,7 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             "n_docs": len(sub),
             "doc_base": int(doc_ids.min()),
             "sum_dl": int(dls.sum()),
-            "n_terms": int(seg_n_terms),
+            "n_terms": len(uniq_list),
             "n_postings": int(seg_n_postings),
             "fp_sum": fp,
             "postings_bytes": os.path.getsize(pfile),
@@ -501,7 +494,6 @@ def build_index(
     analyzer: str = "standard",
     field_name: str = "content",
     resume: bool = True,
-    shard_postings: int = DEFAULT_SHARD_POSTINGS,
 ) -> Manifest:
     """Build (or resume) the inverted index for ``source`` at ``index_dir``.
 
@@ -510,15 +502,6 @@ def build_index(
     doc_id range of ``docs_per_seg`` docs (ingestion-order slices, like
     Lucene's flush-ordered segments).
     """
-    if docs_per_seg > shard_postings:
-        # the build kernel emits one row per term (df <= docs_per_seg
-        # bounds it); sharding only ever arises in MERGED segments,
-        # where merge_segments honors shard_postings
-        raise ValueError(
-            f"docs_per_seg ({docs_per_seg}) must be <= shard_postings "
-            f"({shard_postings}); a build segment's df can never exceed "
-            "its doc count, so larger segments would need in-build sharding"
-        )
     prev = read_manifest(index_dir) if resume else None
     if prev is not None and (prev.docs_per_seg != docs_per_seg
                              or prev.analyzer != analyzer
@@ -571,7 +554,7 @@ def build_index(
         content.alias(field_name),
     )
     stats = prepared.repartition("seg").mapInArrow(
-        make_segment_writer(index_dir, analyzer, field_name, shard_postings),
+        make_segment_writer(index_dir, analyzer, field_name),
         schema=STATS_SCHEMA,
     )
     seg_rows = {r["seg"]: r.asDict() for r in stats.collect()}

@@ -39,22 +39,17 @@ import pandas as pd
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.postings import (
-    decode_docs,
-    decode_norms,
-    decode_positions_concat,
-    decode_tfs,
-    encode_posting_list,
-)
+from ..functions.postings import decode_docs_concat
 from .build import (
     DEFAULT_SHARD_POSTINGS,
     Manifest,
     POSTINGS_SCHEMA,
+    _POSTING_COLS,
+    _offsets,
     commit_manifest,
+    encode_posting_rows,
     read_manifest,
 )
-
-MERGED_POSTINGS_SCHEMA = POSTINGS_SCHEMA + ", first_doc_key long"
 
 # merged-segment id namespace, disjoint from build ids (doc//docs_per_seg)
 MERGE_SEG_BASE = 1_000_000_000
@@ -105,21 +100,21 @@ def _ragged_gather(buf: bytes, lo: np.ndarray, hi: np.ndarray) -> bytes:
     return arr[base + local].tobytes()
 
 
-def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
+def _merge_kernel_factory(seg_order: Dict[int, int],
                           shard_postings: int = DEFAULT_SHARD_POSTINGS,
                           deleted: Optional[np.ndarray] = None):
-    """applyInPandas kernel over term_bucket groups of COLD (nowhere
-    sharded) terms — each group holds every row of its terms: k-way
-    doc-ordered merge of each term's posting rows across source
+    """applyInPandas kernel over (target, term_bucket) groups of COLD
+    (nowhere sharded) terms — each group holds every row of its terms:
+    k-way doc-ordered merge of each term's posting rows across source
     segments, fully batched:
 
     - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
       a varint stream whose per-posting values reset at posting starts
       concatenates into another valid stream, and value-boundary byte
       offsets come from one flag scan (varint_value_offsets);
-    - only DOC deltas are re-encoded (block boundaries move), in ONE
-      batched decode + ONE batched encode per task group, mirroring the
-      build kernel's single-pass structure.
+    - doc ids are decoded in ONE batched pass and the merged lists are
+      re-blocked by ``build.encode_posting_rows``, the writer the build
+      flush uses, so a merged segment equals a fresh build.
 
     ``deleted`` (sorted doc_ids): the expungeDeletes path (`[U]
     .../index/IndexWriter.java :: forceMergeDeletes`) — tombstoned
@@ -131,180 +126,68 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
     deleted = np.empty(0, np.int64) if deleted is None else deleted
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.varint import (
-            decode_varint,
-            encode_varint_with_lengths,
-            varint_value_offsets,
-        )
-        from .build import BLOCK_SIZE, _POSTING_COLS
+        import pyarrow as pa
 
-        out = {c: [] for c in _POSTING_COLS + ["seg", "first_doc_key"]}
+        from ..functions.varint import decode_varint, varint_value_offsets
+
+        out = {c: [] for c in _POSTING_COLS + ["seg"]}
         if not len(pdf):
             return pd.DataFrame(out)
         cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        # multi-group pass (merge_many): the target segment id rides in
-        # on the grouping column instead of the factory closure
-        seg_target = (int(cols["__target"][0]) if new_seg is None
-                      else new_seg)
         t_codes, t_uniq = pd.factorize(cols["term"], sort=False)
         ord_arr = np.fromiter(
             (seg_order[s] for s in cols["seg"]), dtype=np.int64, count=len(pdf))
         idx = np.lexsort((cols["shard"], ord_arr, t_codes))
-
-        df_r = cols["df"][idx].astype(np.int64)
         c_sorted = t_codes[idx]
         row_t_starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
-        row_t_ends = np.append(row_t_starts[1:], len(c_sorted))
+        # posting-space start of each term
+        term_starts = _offsets(cols["df"][idx].astype(np.int64))[row_t_starts]
+        term_names = t_uniq[c_sorted[row_t_starts]]
 
-        # posting-space offsets per row / per term
-        row_off = np.zeros(len(idx) + 1, dtype=np.int64)
-        np.cumsum(df_r, out=row_off[1:])
-        n_post = int(row_off[-1])
-        term_starts = row_off[row_t_starts]
-        term_ends = row_off[row_t_ends]
-        # per-term metadata resolved from ROW space before any purge
-        term_names = [t_uniq[c_sorted[s]] for s in row_t_starts]
-        term_buckets = cols["term_bucket"][idx][row_t_starts].astype(np.int64)
-
-        # batched decode of doc ids (absolute resets at original block
-        # starts make the concatenated stream self-describing)
-        docs_cat = b"".join(cols["docs"][i] for i in idx)
-        d = decode_varint(docs_cat)
-        blk_n_all = np.concatenate([
-            np.asarray(cols["blk_n"][i], dtype=np.int64) for i in idx])
-        ob_starts = np.zeros(len(blk_n_all), dtype=np.int64)
-        ob_starts[1:] = np.cumsum(blk_n_all)[:-1]
-        csum = np.cumsum(d)
-        corr = np.zeros(len(blk_n_all), dtype=np.int64)
-        corr[1:] = csum[ob_starts[1:] - 1]
-        docs_all = csum - np.repeat(corr, blk_n_all)
-
+        docs_all = decode_docs_concat(cols["docs"][idx], cols["blk_n"][idx])
         # tf values (needed for stats + position boundaries); blob bytes reused
-        tfs_cat = b"".join(cols["tfs"][i] for i in idx)
+        tfs_cat = b"".join(cols["tfs"][idx])
         tf_all = decode_varint(tfs_cat)
         tf_boff = varint_value_offsets(tfs_cat)          # n_post+1
-        pos_cat = b"".join(cols["pos"][i] for i in idx)
-        pos_boff = varint_value_offsets(pos_cat)         # n_positions+1
-        norms_cat = b"".join(cols["norms"][i] for i in idx)
-        norms_all = np.frombuffer(norms_cat, dtype=np.uint8).astype(np.int64)
-        pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-        np.cumsum(tf_all, out=pos_excl[1:])
-        # per-POSTING pos byte offsets (n_post+1): downstream slicing
-        # only ever needs posting-boundary offsets
-        pos_poff = pos_boff[pos_excl]
+        pos_cat = b"".join(cols["pos"][idx])
+        # per-POSTING pos byte offsets (n_post+1)
+        pos_poff = varint_value_offsets(pos_cat)[_offsets(tf_all)]
+        norms_all = np.frombuffer(b"".join(cols["norms"][idx]),
+                                  dtype=np.uint8).astype(np.int64)
 
         if deleted.size:
             di = np.searchsorted(deleted, docs_all)
             dic = np.minimum(di, len(deleted) - 1)
             keep = ~((di < len(deleted)) & (deleted[dic] == docs_all))
             if not keep.all():
-                t_sizes = term_ends - term_starts
-                t_id = np.repeat(np.arange(len(term_starts)), t_sizes)[keep]
+                t_id = np.repeat(np.arange(len(term_starts)),
+                                 np.diff(np.append(term_starts, len(docs_all))))[keep]
                 tfs_cat = _ragged_gather(tfs_cat, tf_boff[:-1][keep],
                                          tf_boff[1:][keep])
                 pos_cat = _ragged_gather(pos_cat, pos_poff[:-1][keep],
                                          pos_poff[1:][keep])
-                tf_lens = (tf_boff[1:] - tf_boff[:-1])[keep]
-                pos_lens = (pos_poff[1:] - pos_poff[:-1])[keep]
+                tf_boff = _offsets(np.diff(tf_boff)[keep])
+                pos_poff = _offsets(np.diff(pos_poff)[keep])
                 docs_all = docs_all[keep]
                 tf_all = tf_all[keep]
                 norms_all = norms_all[keep]
-                norms_cat = norms_all.astype(np.uint8).tobytes()
                 n_post = len(docs_all)
-                tf_boff = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(tf_lens, out=tf_boff[1:])
-                pos_poff = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(pos_lens, out=pos_poff[1:])
-                pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(tf_all, out=pos_excl[1:])
                 counts = np.bincount(t_id, minlength=len(term_starts))
                 nz = np.flatnonzero(counts)
                 if nz.size == 0:
                     return pd.DataFrame(out)
-                term_names = [term_names[i] for i in nz]
-                term_buckets = term_buckets[nz]
-                sizes_nz = counts[nz]
-                term_ends = np.cumsum(sizes_nz)
-                term_starts = term_ends - sizes_nz
+                term_names = term_names[nz]
+                term_starts = _offsets(counts[nz])[:-1]
                 if n_post == 0:
                     return pd.DataFrame(out)
 
-        # new 128-block grid per term (shard boundaries align: multiple
-        # of BLOCK_SIZE)
-        nb = (term_ends - term_starts + BLOCK_SIZE - 1) // BLOCK_SIZE
-        blk_of_term = np.repeat(np.arange(len(term_starts)), nb)
-        blk_local = np.arange(int(nb.sum()), dtype=np.int64) - \
-            np.repeat(np.cumsum(nb) - nb, nb)
-        b_starts = term_starts[blk_of_term] + blk_local * BLOCK_SIZE
-        b_ends = np.minimum(b_starts + BLOCK_SIZE, term_ends[blk_of_term])
-        blk_bounds = np.zeros(len(term_starts) + 1, dtype=np.int64)
-        np.cumsum(nb, out=blk_bounds[1:])
-
-        # re-encode ONLY doc deltas, reset at the new block starts
-        ddel = np.empty(n_post, dtype=np.int64)
-        ddel[0] = docs_all[0]
-        np.subtract(docs_all[1:], docs_all[:-1], out=ddel[1:])
-        ddel[b_starts] = docs_all[b_starts]
-        docs_buf, dlen = encode_varint_with_lengths(ddel)
-        dboff = np.zeros(n_post + 1, dtype=np.int64)
-        np.cumsum(dlen, out=dboff[1:])
-
-        blk_first_g = docs_all[b_starts]
-        blk_last_g = docs_all[b_ends - 1]
-        blk_n_g = (b_ends - b_starts).astype(np.int32)
-        blk_max_tf_g = np.maximum.reduceat(tf_all, b_starts).astype(np.int32)
-        blk_min_norm_g = np.minimum.reduceat(norms_all, b_starts).astype(np.int32)
-        cum_tf_t = np.add.reduceat(tf_all, term_starts)
-        max_tf_t = np.maximum.reduceat(tf_all, term_starts)
-        min_norm_t = np.minimum.reduceat(norms_all, term_starts)
-
-        field0 = cols["field"][0]
-        for t in range(len(term_starts)):
-            ts, te = int(term_starts[t]), int(term_ends[t])
-            term = term_names[t]
-            b0, b1 = int(blk_bounds[t]), int(blk_bounds[t + 1])
-            if te - ts <= shard_postings:
-                shard_ranges = [(ts, te, b0, b1, 0)]
-            else:
-                shard_ranges = []
-                bps = shard_postings // BLOCK_SIZE
-                for si, s0 in enumerate(range(ts, te, shard_postings)):
-                    e0 = min(s0 + shard_postings, te)
-                    sb0 = b0 + si * bps
-                    sb1 = min(sb0 + bps, b1)
-                    shard_ranges.append((s0, e0, sb0, sb1, si))
-            for (s0, e0, sb0, sb1, si) in shard_ranges:
-                d_lo, t_lo = dboff[s0], tf_boff[s0]
-                p_lo = pos_poff[s0]
-                out["field"].append(field0)
-                out["term"].append(term)
-                out["term_bucket"].append(int(term_buckets[t]))
-                out["seg"].append(seg_target)
-                out["shard"].append(si)
-                out["df"].append(int(e0 - s0))
-                out["cum_tf"].append(int(cum_tf_t[t]) if len(shard_ranges) == 1
-                                     else int(tf_all[s0:e0].sum()))
-                out["max_tf"].append(int(max_tf_t[t]) if len(shard_ranges) == 1
-                                     else int(tf_all[s0:e0].max()))
-                out["min_norm"].append(int(min_norm_t[t]) if len(shard_ranges) == 1
-                                       else int(norms_all[s0:e0].min()))
-                out["blk_first"].append(blk_first_g[sb0:sb1].tolist())
-                out["blk_last"].append(blk_last_g[sb0:sb1].tolist())
-                out["blk_n"].append(blk_n_g[sb0:sb1].tolist())
-                out["blk_max_tf"].append(blk_max_tf_g[sb0:sb1].tolist())
-                out["blk_min_norm"].append(blk_min_norm_g[sb0:sb1].tolist())
-                out["blk_doc_off"].append(
-                    (dboff[b_starts[sb0:sb1]] - d_lo).astype(np.int32).tolist())
-                out["blk_tf_off"].append(
-                    (tf_boff[b_starts[sb0:sb1]] - t_lo).astype(np.int32).tolist())
-                out["blk_pos_off"].append(
-                    (pos_poff[b_starts[sb0:sb1]] - p_lo).astype(np.int32).tolist())
-                out["docs"].append(docs_buf[d_lo:dboff[e0]])
-                out["tfs"].append(tfs_cat[t_lo:tf_boff[e0]])
-                out["pos"].append(pos_cat[p_lo:pos_poff[e0]])
-                out["norms"].append(norms_cat[s0:e0])
-                out["first_doc_key"].append(int(docs_all[s0]))
-        return pd.DataFrame(out)
+        table = encode_posting_rows(
+            cols["field"][0], term_names, term_starts, docs_all, tf_all,
+            norms_all, tfs_cat, tf_boff, pos_cat, pos_poff, shard_postings)
+        # multi-group pass (merge_many): the target segment id rides in
+        # on the grouping column
+        return table.append_column("seg", pa.array(
+            np.full(table.num_rows, cols["__target"][0], np.int32))).to_pandas()
 
     return kernel
 
@@ -340,8 +223,6 @@ def merge_many(spark: SparkSession, index_dir: str,
     enumeration still walks the range and masks with the retained
     tombstones, so queries need no special case.
     """
-    from .build import BLOCK_SIZE
-
     deleted_arr = None
     if purge_deleted:
         from .delete import load_deleted_ids
@@ -353,8 +234,6 @@ def merge_many(spark: SparkSession, index_dir: str,
             deleted_arr = None
             purge_deleted = False
 
-    shard_postings = max(BLOCK_SIZE,
-                         -(-shard_postings // BLOCK_SIZE) * BLOCK_SIZE)
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest under {index_dir}")
@@ -394,13 +273,13 @@ def merge_many(spark: SparkSession, index_dir: str,
     # projection; cold terms concat + re-shard in the kernel. When
     # purging, hot rows also go through the kernel (their postings may
     # contain tombstoned docs).
-    kernel = _merge_kernel_factory(None, seg_order, shard_postings,
+    kernel = _merge_kernel_factory(seg_order, shard_postings,
                                    deleted=deleted_arr)
     has_hot = (not purge_deleted
                and bool(postings.filter(F.col("shard") > 0).head(1)))
     if not has_hot:
         merged = postings.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=MERGED_POSTINGS_SCHEMA)
+            kernel, schema=POSTINGS_SCHEMA)
     else:
         hot_terms = (
             postings.filter(F.col("shard") > 0)
@@ -409,21 +288,17 @@ def merge_many(spark: SparkSession, index_dir: str,
         cold = postings.join(F.broadcast(hot_terms),
                              ["__target", "term_bucket", "term"], "left_anti")
         merged_cold = cold.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=MERGED_POSTINGS_SCHEMA)
+            kernel, schema=POSTINGS_SCHEMA)
         passthrough = (
             postings.join(F.broadcast(hot_terms),
                           ["__target", "term_bucket", "term"], "left_semi")
             .withColumn("seg", F.col("__target").cast("int"))
-            .withColumn("first_doc_key", F.element_at("blk_first", 1))
             .select(*merged_cold.columns)
         )
         merged = merged_cold.unionByName(passthrough)
     # shard renumbering per (segment, term) in doc order (metadata-sized)
-    w = Window.partitionBy("seg", "term").orderBy("first_doc_key")
-    merged = (
-        merged.withColumn("shard", F.row_number().over(w) - F.lit(1))
-        .drop("first_doc_key")
-    )
+    w = Window.partitionBy("seg", "term").orderBy(F.element_at("blk_first", 1))
+    merged = merged.withColumn("shard", F.row_number().over(w) - F.lit(1))
     # dynamic overwrite scoped to THIS write (only the source/target seg
     # partitions are replaced; a session-global conf would leak — it
     # also suppresses the root _SUCCESS marker for every later

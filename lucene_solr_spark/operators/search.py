@@ -43,6 +43,7 @@ from ..functions.bm25 import idf as idf_fn, norm_cache, score_tf, term_weight
 from ..functions.postings import (
     decode_block_docs,
     decode_docs,
+    decode_docs_concat,
     decode_norms,
     decode_positions_concat,
     decode_tfs,
@@ -180,27 +181,6 @@ def _assemble_terms(pdf: pd.DataFrame) -> Dict[str, _TermPostings]:
 # ------------------------------------------------------------- the kernel
 
 
-def _batch_decode_docs(rows) -> np.ndarray:
-    """Decode MANY posting rows' doc blobs in ONE varint pass (each
-    row's stream starts with an absolute value at a block boundary, so
-    the concatenated stream is a valid reset-segmented delta stream).
-    The per-call overhead of decode_varint would otherwise dominate
-    wildcard queries matching thousands of terms."""
-    if not rows:
-        return np.empty(0, np.int64)
-    from ..functions.varint import decode_varint
-
-    buf = b"".join(r["docs"] for r in rows)
-    d = decode_varint(buf)
-    blk_n_all = np.concatenate([np.asarray(r["blk_n"], dtype=np.int64) for r in rows])
-    starts = np.zeros(len(blk_n_all), dtype=np.int64)
-    starts[1:] = np.cumsum(blk_n_all)[:-1]
-    c = np.cumsum(d)
-    corr = np.zeros(len(blk_n_all), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, blk_n_all)
-
-
 def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.ndarray:
     """float32 contribution of (docs, scores) to each target doc (0 if absent)."""
     out = np.zeros(len(targets), dtype=np.float32)
@@ -252,9 +232,11 @@ class _SegmentScorer:
             from ..plans.query import multiterm_predicate
 
             pred = multiterm_predicate(q)
+            # one batched decode: per-call overhead would dominate
+            # wildcards matching thousands of terms
             rows = [r for t, tp in self.terms.items() if pred(t) for r in tp.rows]
-            docs = _batch_decode_docs(rows)
-            docs = np.unique(docs)
+            docs = np.unique(decode_docs_concat([r["docs"] for r in rows],
+                                                [r["blk_n"] for r in rows]))
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, MatchAllQuery):
             base, n = self.doc_base.get(self.seg, (0, 0))

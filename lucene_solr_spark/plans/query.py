@@ -454,7 +454,7 @@ _TOKEN_SPEC = re.compile(
         (?P<lparen>\() | (?P<rparen>\)) |
         (?P<regex>/(?:[^/\\\s]|\\.)+/) |
         (?P<lbracket>[\[\{]) | (?P<rbracket>[\]\}]) |
-        (?P<and>AND\b) | (?P<or>OR\b) | (?P<not>NOT\b|-) |
+        (?P<and>AND\b) | (?P<or>OR\b) | (?P<not>NOT\b|-) | (?P<must>\+) |
         (?P<phrase>"[^"]*") |
         (?P<fieldname>[A-Za-z_][A-Za-z0-9_]*(?=:)) | (?P<colon>:) |
         (?P<word>[^\s()":\[\]{}]+)
@@ -511,9 +511,12 @@ class _Parser:
             if kind == "or":
                 self.lex.next()
                 explicit_or = True
+                # Lucene makes the clause before OR optional: +a OR b == a OR b
+                if isinstance(clauses[-1], _Must):
+                    clauses[-1] = clauses[-1].query
                 clauses.append(self._and_expr(fld))
             elif kind in ("lparen", "phrase", "fieldname", "word", "not",
-                          "regex", "lbracket"):
+                          "must", "regex", "lbracket"):
                 # implicit operator: classic QueryParser applies the
                 # default operator (q.op) — OR unless AND is configured
                 # (`[U] .../queryparser/classic/QueryParserBase.java ::
@@ -524,7 +527,7 @@ class _Parser:
                     must, must_not = [], []
                     for c in (prev, nxt):
                         (must_not if isinstance(c, _Neg) else must).append(
-                            c.query if isinstance(c, _Neg) else c)
+                            c.query if isinstance(c, (_Neg, _Must)) else c)
                     clauses.append(_conj(must, must_not))
                 else:
                     clauses.append(nxt)
@@ -532,12 +535,17 @@ class _Parser:
                 break
         if len(clauses) == 1 and not explicit_or:
             return clauses[0]
-        should, must_not = [], []
+        should, must, must_not = [], [], []
         for c in clauses:
             if isinstance(c, _Neg):
                 must_not.append(c.query)
+            elif isinstance(c, _Must):
+                must.append(c.query)
             else:
                 should.append(c)
+        if must:
+            return BooleanQuery(should=tuple(should), must=tuple(must),
+                                must_not=tuple(must_not))
         if not should and must_not:
             # purely negative disjunction ('-a -b', q.op=OR): same
             # makeQueryable fix as _conj — all-docs-minus, never
@@ -558,16 +566,21 @@ class _Parser:
             if isinstance(c, _Neg):
                 must_not.append(c.query)
             else:
-                must.append(c)
+                must.append(c.query if isinstance(c, _Must) else c)
         return _conj(must, must_not)
 
     def _not_expr(self, fld: str):
-        if self.lex.peek()[0] == "not":
+        kind = self.lex.peek()[0]
+        if kind == "not":
             self.lex.next()
             inner = self._not_expr(fld)
             if isinstance(inner, _Neg):  # double negation
                 return inner.query
-            return _Neg(inner)
+            return _Neg(inner.query if isinstance(inner, _Must) else inner)
+        if kind == "must":
+            self.lex.next()
+            inner = self._not_expr(fld)
+            return inner if isinstance(inner, (_Neg, _Must)) else _Must(inner)
         return self._atom(fld)
 
     def _atom(self, fld: str):
@@ -576,7 +589,7 @@ class _Parser:
             q = self._or_expr(fld)
             if self.lex.next()[0] != "rparen":
                 raise ValueError("unbalanced parenthesis")
-            return q
+            return q.query if isinstance(q, _Must) else q
         if kind == "fieldname":
             colon = self.lex.next()
             assert colon[0] == "colon"
@@ -688,6 +701,15 @@ class _Neg:
     query: Query
 
 
+@dataclass(frozen=True)
+class _Must:
+    """Parse-time marker for a leading ``+``; resolved into must by the
+    parent (`[U] .../queryparser/classic/QueryParserBase.java ::
+    addClause` MOD_REQ)."""
+
+    query: Query
+
+
 def _conj(must, must_not) -> BooleanQuery:
     """Conjunction builder shared by explicit AND and q.op=AND implicit
     joins: a PURELY negative conjunction ('NOT a NOT b' / 'NOT a AND
@@ -707,6 +729,8 @@ def parse_query(text: str, default_field: str = DEFAULT_FIELD,
     if isinstance(q, _Neg):
         # pure negation: NOT x == MatchAll minus x
         q = BooleanQuery(must=(MatchAllQuery(),), must_not=(q.query,))
+    elif isinstance(q, _Must):
+        q = q.query
     return rewrite(q)
 
 

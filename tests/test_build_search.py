@@ -26,6 +26,7 @@ QUERIES = [
     "spark AND merge", "join AND window AND key", "spark AND zzzabsent",
     # bool_mixed
     "spark AND NOT merge", "batch OR stream NOT join", "NOT spark",
+    "+spark window",
     "(hash OR scan) AND NOT (merge OR join)",
     # phrase
     '"batch batch"', '"merge line"', '"sort table scan"', '"spark zzzabsent"',

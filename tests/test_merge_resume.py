@@ -96,6 +96,35 @@ def test_merge_preserves_results(spark, corpus, tmp_path):
     assert rep["ok"], rep["problems"]
 
 
+def _posting_rows_by_term(index_dir):
+    """{term: [posting row without seg/shard, in shard order]} of the
+    one committed segment."""
+    import pyarrow.parquet as pq
+
+    (seg,) = read_manifest(index_dir).seg_ids
+    rows = pq.read_table(f"{index_dir}/postings/seg={seg}").to_pylist()
+    out = {}
+    for r in sorted(rows, key=lambda r: (r["term"], r["shard"])):
+        out.setdefault(r["term"], []).append(
+            {c: v for c, v in r.items() if c not in ("seg", "shard")})
+    return out
+
+
+def test_merged_segment_equals_fresh_build(spark, corpus, tmp_path):
+    """Build and merge encode posting rows through the same writer: 8
+    build segments merged into one equal a one-segment build of the
+    same docs in every posting column."""
+    merged, fresh = str(tmp_path / "merged"), str(tmp_path / "fresh")
+    m0 = build_index(spark, corpus, merged, docs_per_seg=64)
+    assert len(m0.seg_ids) == 8
+    merge_segments(spark, merged, m0.seg_ids)
+    build_index(spark, corpus, fresh, docs_per_seg=512)
+    got, want = _posting_rows_by_term(merged), _posting_rows_by_term(fresh)
+    assert got.keys() == want.keys()
+    for term in want:
+        assert got[term] == want[term], term
+
+
 def test_force_merge_and_vacuum(spark, corpus, tmp_path):
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=32)  # 16 segments

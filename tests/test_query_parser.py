@@ -62,6 +62,22 @@ def test_pure_negation_wraps_matchall():
     assert q.must_not == (TermQuery("spark"),)
 
 
+def test_plus_prefix_is_must():
+    """A leading ``+`` makes a clause required, as in Lucene's classic
+    parser: ``+a +b`` is ``a AND b``; ``+a b`` keeps ``b`` optional."""
+    spark, merge = TermQuery("spark"), TermQuery("merge")
+    assert parse_query("+spark +merge") == parse_query("spark AND merge")
+    assert parse_query("+spark +merge") == BooleanQuery(must=(spark, merge))
+    assert parse_query("+spark merge") == BooleanQuery(must=(spark,), should=(merge,))
+    assert parse_query("+spark -merge") == BooleanQuery(must=(spark,), must_not=(merge,))
+    assert parse_query("+spark") == spark
+    # OR makes the clause before it optional: +a OR b == a OR b
+    assert parse_query("+spark OR merge") == parse_query("spark OR merge")
+    # a '+' inside a word is not an operator
+    assert parse_query("c++") == TermQuery("c")
+    assert parse_query("c++ +spark") == BooleanQuery(must=(spark,), should=(TermQuery("c"),))
+
+
 def test_nested_and_flatten_dedup():
     q = parse_query("(spark OR (merge OR wand)) OR spark")
     assert q == BooleanQuery(should=(TermQuery("spark"), TermQuery("merge"), TermQuery("wand")))

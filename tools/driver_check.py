@@ -31,6 +31,7 @@ from decimal import Decimal
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+from perfbench.machine import cpus  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql.types import (  # noqa: E402
     ArrayType, DecimalType, MapType, StructType)
@@ -125,7 +126,7 @@ def main():
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus()}]")
         .appName("driver-check")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")

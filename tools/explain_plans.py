@@ -40,10 +40,12 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from perfbench.machine import cpus, heap_gb_for, ram_bytes
+
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus()}]")
         .appName("explain-plans")
-        .config("spark.driver.memory", "12g")
+        .config("spark.driver.memory", f"{heap_gb_for(ram_bytes())}g")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.ui.enabled", "false")

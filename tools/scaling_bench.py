@@ -2,13 +2,14 @@
 
 No real cluster exists in this sandbox, so the N -> 4N executor
 criterion is evidenced by running the SAME job on the SAME input at two
-parallelism levels: local[8] (N) and local[32] (4N). Each level runs in
-a FRESH JVM (subprocess) so no warm caches leak between levels.
+parallelism levels: local[nproc/4] (N) and local[nproc] (4N) by default.
+Each level runs in a FRESH JVM (subprocess) so no warm caches leak
+between levels.
 
     python tools/scaling_bench.py [--docs 60000] [--skip-gen]
 
 Prints a summary table and a JSON line:
-    {"efficiency": e, "levels": [{...8...}, {...32...}]}
+    {"efficiency": e, "levels": [{...N...}, {...4N...}]}
 and rewrites the measured rows in BASELINE.md is left to the caller.
 """
 
@@ -22,6 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.machine import cpus, heap_gb_for, ram_bytes  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -29,9 +32,9 @@ def gen_corpus(n_docs: int, path: str) -> None:
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus()}]")
         .appName("scaling-corpus-gen")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{heap_gb_for(ram_bytes())}g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -84,10 +87,17 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=60000)
     ap.add_argument("--skip-gen", action="store_true")
-    ap.add_argument("--levels", default="2,8,32",
-                    help="comma-separated core counts; efficiency is "
-                         "reported for every (n, 4n) pair present")
+    ap.add_argument("--levels", default=None,
+                    help="comma-separated core counts (default n,4n with "
+                         "n = nproc//4); efficiency is reported for every "
+                         "(n, 4n) pair present")
     args = ap.parse_args()
+    if args.levels is None:
+        n = cpus() // 4
+        if n < 1:
+            raise SystemExit(f"scaling_bench needs >= 4 usable cores for an "
+                             f"N -> 4N pair; this machine has {cpus()}")
+        args.levels = f"{n},{4 * n}"
 
     corpus = os.path.join(REPO, ".work", "scaling_corpus")
     if not args.skip_gen or not os.path.exists(corpus):
@@ -99,10 +109,10 @@ def main() -> None:
     # to CPU load) directly corrupts scaling numbers. Record the
     # aggregate copy bandwidth at each level's process count alongside
     # the measurement so a degraded run is attributable.
-    membw = {n: round(_membw(n), 1) for n in (1, 4, 8)}
+    core_counts = [int(x) for x in args.levels.split(",")]
+    membw = {n: round(_membw(n), 1) for n in core_counts}
     print(f"membw probe GB/s {membw}", file=sys.stderr)
 
-    core_counts = [int(x) for x in args.levels.split(",")]
     levels = [run_level(c, corpus) for c in core_counts]
     tp = {lv["cpus"]: lv["docs_per_sec"] for lv in levels}
     # primary N -> 4N pair: the lowest pair below the single-box DRAM

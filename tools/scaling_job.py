@@ -19,6 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.machine import heap_gb_for, ram_bytes  # noqa: E402
+
 QUERIES = [
     "content:spark",
     "content:merge",
@@ -45,7 +47,8 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName(f"scaling-job-{args.cpus}")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{heap_gb_for(ram_bytes())}g"))
         # 2 task waves per core: binomial seg-count skew across hash
         # partitions amortizes instead of defining the stage tail
         .config("spark.sql.shuffle.partitions", str(args.cpus * 2))
