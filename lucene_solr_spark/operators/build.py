@@ -15,7 +15,7 @@ Spark-first reimplementation of the reference build pipeline
 - `[U] .../index/SegmentInfos.java :: commit`` — atomic manifest
   ``gen-N.json`` rename publishes segments; readers only see segments
   listed in the manifest, so partial writes from a failed run are
-  invisible and a re-run is idempotent (dynamic partition overwrite
+  invisible and a re-run is idempotent (each task's atomic rename
   rewrites only the segments it recomputes). This is the
   checkpoint/resume protocol required by BASELINE.json north_rule.
 
@@ -51,36 +51,33 @@ DEFAULT_DOCS_PER_SEG = 4096
 DEFAULT_SHARD_POSTINGS = 1 << 17  # hot-term row split threshold
 TERM_BUCKETS = 1024  # coarse term-space partitioning for pushdown at scale
 
-# Flat format v3 (functions/postings.py): whole-list blobs + per-block
-# metadata arrays instead of nested block structs
-POSTINGS_SCHEMA = (
-    "field string, term string, term_bucket int, seg int, shard int, "
-    "df int, cum_tf long, max_tf int, min_norm int, "
-    "blk_first array<long>, blk_last array<long>, blk_n array<int>, "
-    "blk_max_tf array<int>, blk_min_norm array<int>, "
-    "blk_doc_off array<int>, blk_tf_off array<int>, blk_pos_off array<int>, "
-    "docs binary, tfs binary, pos binary, norms binary"
-)
-
-DOCMETA_SCHEMA = (
-    "seg int, doc_id long, repo string, path string, commit string, lang string, "
-    "dl int, norm_byte int, sha256 string"
-)
-
-
-_POSTING_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ") if c.split()[0] != "seg"]
 _DOCMETA_COLS = ["doc_id", "repo", "path", "commit", "lang", "dl", "norm_byte", "sha256"]
 
-# per-segment stats row: the ONLY thing a build task sends back to the
-# driver (the manifest/lineage record; everything else is written by the
-# task itself, Lucene-style)
-STATS_SCHEMA = (
-    "seg int, n_docs long, doc_base long, sum_dl long, "
-    "n_terms long, n_postings long, fp_sum long, postings_bytes long"
-)
+
+def _stats_pa_schema():
+    """Per-segment stats row: the ONLY thing a build or merge task sends
+    back to the driver (the manifest/lineage record; everything else is
+    written by the task itself, Lucene-style). ``stats_schema()`` is its
+    Spark form."""
+    import pyarrow as pa
+
+    return pa.schema([
+        ("seg", pa.int32()), ("n_docs", pa.int64()), ("doc_base", pa.int64()),
+        ("sum_dl", pa.int64()), ("n_terms", pa.int64()),
+        ("n_postings", pa.int64()), ("fp_sum", pa.int64()),
+        ("postings_bytes", pa.int64()),
+    ])
+
+
+def stats_schema():
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(_stats_pa_schema())
 
 
 def _postings_pa_schema():
+    """Flat format v3 (functions/postings.py): whole-list blobs +
+    per-block metadata arrays; ``seg`` is the partition directory."""
     import pyarrow as pa
 
     return pa.schema([
@@ -194,22 +191,27 @@ def encode_posting_rows(field_name: str, terms, term_starts: np.ndarray,
     }, schema=_postings_pa_schema())
 
 
-def _atomic_parquet_write(table, dirname: str, row_group_size: int) -> None:
-    """tmp write + atomic rename, one file per segment dir. Retried or
-    speculative tasks rewrite identical deterministic bytes, so the
-    rename is idempotent (the segments_N discipline at file level)."""
+def _atomic_parquet_write(table, dirname: str, row_group_size: int,
+                          name: str = "part-00000.parquet") -> int:
+    """tmp write + atomic rename -> bytes written. Retried or speculative
+    tasks rewrite identical deterministic bytes, so the rename is
+    idempotent (the segments_N discipline at file level). The temp file
+    is dot-prefixed: Spark's file listing skips ``.``/``_`` names, so a
+    writer killed before the rename leaves nothing a reader scans."""
     import pyarrow.parquet as pq
 
     os.makedirs(dirname, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=dirname, suffix=".inprogress")
+    fd, tmp = tempfile.mkstemp(dir=dirname, prefix=".", suffix=".inprogress")
     os.close(fd)
     try:
         pq.write_table(table, tmp, row_group_size=row_group_size,
                        compression="snappy")
-        os.replace(tmp, os.path.join(dirname, "part-00000.parquet"))
+        size = os.path.getsize(tmp)
+        os.replace(tmp, os.path.join(dirname, name))
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+    return size
 
 
 def _seg_term_codes(texts: List[str], analyzer: str):
@@ -338,8 +340,9 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             post_table = _postings_pa_schema().empty_table()
             seg_n_postings = 0
 
-        _atomic_parquet_write(post_table, os.path.join(index_dir, "postings", f"seg={seg}"),
-                              row_group_size=2048)
+        postings_bytes = _atomic_parquet_write(
+            post_table, os.path.join(index_dir, "postings", f"seg={seg}"),
+            row_group_size=2048)
 
         meta_table = pa.table({
             "doc_id": sub["doc_id"],
@@ -357,7 +360,6 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
         fp = 0
         for s in sub["sha256"].to_pylist():
             fp ^= int(s[:15], 16)
-        pfile = os.path.join(index_dir, "postings", f"seg={seg}", "part-00000.parquet")
         return {
             "seg": int(seg),
             "n_docs": len(sub),
@@ -366,15 +368,8 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             "n_terms": len(uniq_list),
             "n_postings": int(seg_n_postings),
             "fp_sum": fp,
-            "postings_bytes": os.path.getsize(pfile),
+            "postings_bytes": postings_bytes,
         }
-
-    stats_pa = pa.schema([
-        ("seg", pa.int32()), ("n_docs", pa.int64()), ("doc_base", pa.int64()),
-        ("sum_dl", pa.int64()), ("n_terms", pa.int64()),
-        ("n_postings", pa.int64()), ("fp_sum", pa.int64()),
-        ("postings_bytes", pa.int64()),
-    ])
 
     def kernel(batches):
         batch_list = [b for b in batches if b.num_rows]
@@ -392,7 +387,7 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
                 sub = tbl.slice(int(bounds[i]), int(bounds[i + 1] - bounds[i]))
                 rows.append(process_segment(sub))
         if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=stats_pa)
+            yield pa.RecordBatch.from_pylist(rows, schema=_stats_pa_schema())
 
     return kernel
 
@@ -555,7 +550,7 @@ def build_index(
     )
     stats = prepared.repartition("seg").mapInArrow(
         make_segment_writer(index_dir, analyzer, field_name),
-        schema=STATS_SCHEMA,
+        schema=stats_schema(),
     )
     seg_rows = {r["seg"]: r.asDict() for r in stats.collect()}
     new_segs = sorted(set(seg_rows) - done)

@@ -13,15 +13,15 @@ Mirrors (SURVEY.md §2.3):
   (SURVEY.md §1.1), merging posting lists is a doc-ordered concat +
   re-block, not a docID remap: strictly cheaper than the reference's
   MappedMultiFields machinery.
-- north_star "salted repartition + sorted-merge" / hot-term skew:
-  already-sharded (hot) terms bypass the merge kernel entirely — their
-  rows are doc-contiguous and block-valid as-is, so they pass through
-  as a pure-JVM projection (the heaviest rows never concentrate in any
-  shuffle group). Cold terms shuffle by term_bucket (1024-way spread),
-  where each group sees EVERY row of its terms so concat + re-shard
-  yields disjoint, ordered doc ranges per output row. The cheap final
-  shard renumbering is a window over posting ROWS (one row per term x
-  shard — metadata-sized, never postings-sized).
+- north_star "salted repartition + sorted-merge": source rows shuffle
+  ONCE, by (target segment, part) with ``part = term_bucket % n_parts``
+  — a salt in term space, so every group holds every row of its terms
+  and a large merge spreads over ``n_parts`` tasks. Each group is merged
+  and written the way a build task writes a segment: re-blocked by
+  ``build.encode_posting_rows`` (hot terms included, so a merged segment
+  equals a fresh build), written by ``build._atomic_parquet_write`` as
+  ``postings/seg=<t>/part-<p>.parquet`` (part 0 also writes the docmeta),
+  and reported back as one build stats row (``build._stats_pa_schema``).
 
 The commit is again manifest-gated: the new segment's parquet is
 invisible until gen-N+1 lists it, and source segments simply stop being
@@ -32,27 +32,36 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Dict, List, Optional, Sequence
+from collections import Counter
+from typing import List, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.postings import decode_docs_concat
 from .build import (
     DEFAULT_SHARD_POSTINGS,
     Manifest,
-    POSTINGS_SCHEMA,
-    _POSTING_COLS,
+    _DOCMETA_COLS,
+    _atomic_parquet_write,
     _offsets,
+    _postings_pa_schema,
+    _stats_pa_schema,
     commit_manifest,
     encode_posting_rows,
     read_manifest,
+    stats_schema,
 )
 
 # merged-segment id namespace, disjoint from build ids (doc//docs_per_seg)
 MERGE_SEG_BASE = 1_000_000_000
+# source postings bytes per merge task. The kernel's Python worker peaks
+# near 25x its source bytes (decoded int64 doc/tf/norm/offset arrays plus
+# the joined blobs): 684 MB for one 25 MB group, 434 MB at 12.7 MB, on a
+# Zipf corpus at docs_per_seg=4096. 16 MB keeps a task near 0.5 GB.
+MERGE_PART_BYTES = 16 << 20
 
 
 # ----------------------------------------------------------------- policy
@@ -100,14 +109,13 @@ def _ragged_gather(buf: bytes, lo: np.ndarray, hi: np.ndarray) -> bytes:
     return arr[base + local].tobytes()
 
 
-def _merge_kernel_factory(seg_order: Dict[int, int],
-                          shard_postings: int = DEFAULT_SHARD_POSTINGS,
-                          deleted: Optional[np.ndarray] = None):
-    """applyInPandas kernel over (target, term_bucket) groups of COLD
-    (nowhere sharded) terms — each group holds every row of its terms:
-    k-way doc-ordered merge of each term's posting rows across source
-    segments, fully batched:
+def _merge_postings(tbl, shard_postings: int, deleted: np.ndarray):
+    """Posting rows holding EVERY row of their terms (one (target, part)
+    group) -> merged v3 rows in term order: k-way doc-ordered merge of
+    each term's rows across source segments, fully batched:
 
+    - a term's rows hold disjoint doc ranges (source segments and their
+      shards), so sorting them by first doc id is the doc-ordered merge;
     - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
       a varint stream whose per-posting values reset at posting starts
       concatenates into another valid stream, and value-boundary byte
@@ -123,71 +131,94 @@ def _merge_kernel_factory(seg_order: Dict[int, int],
     purge is a vectorized ragged byte-gather of the kept postings, not
     a re-encode; doc deltas are re-encoded anyway.
     """
-    deleted = np.empty(0, np.int64) if deleted is None else deleted
+    import pyarrow.compute as pc
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    from ..functions.varint import decode_varint, varint_value_offsets
+
+    if not tbl.num_rows:
+        return _postings_pa_schema().empty_table()
+    t_codes, t_uniq = pd.factorize(tbl["term"].to_numpy(), sort=True)
+    first_doc = pc.list_element(tbl["blk_first"], 0).to_numpy()
+    idx = np.lexsort((first_doc, t_codes))
+    cols = {c: tbl[c].to_numpy()[idx]
+            for c in ("df", "docs", "blk_n", "tfs", "pos", "norms")}
+    c_sorted = t_codes[idx]
+    row_t_starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
+    # posting-space start of each term
+    term_starts = _offsets(cols["df"].astype(np.int64))[row_t_starts]
+    term_names = t_uniq[c_sorted[row_t_starts]]
+
+    docs_all = decode_docs_concat(cols["docs"], cols["blk_n"])
+    # tf values (needed for stats + position boundaries); blob bytes reused
+    tfs_cat = b"".join(cols["tfs"])
+    tf_all = decode_varint(tfs_cat)
+    tf_boff = varint_value_offsets(tfs_cat)          # n_post+1
+    pos_cat = b"".join(cols["pos"])
+    # per-POSTING pos byte offsets (n_post+1)
+    pos_poff = varint_value_offsets(pos_cat)[_offsets(tf_all)]
+    norms_all = np.frombuffer(b"".join(cols["norms"]),
+                              dtype=np.uint8).astype(np.int64)
+
+    if deleted.size:
+        di = np.searchsorted(deleted, docs_all)
+        dic = np.minimum(di, len(deleted) - 1)
+        keep = ~((di < len(deleted)) & (deleted[dic] == docs_all))
+        if not keep.all():
+            t_id = np.repeat(np.arange(len(term_starts)),
+                             np.diff(np.append(term_starts, len(docs_all))))[keep]
+            tfs_cat = _ragged_gather(tfs_cat, tf_boff[:-1][keep], tf_boff[1:][keep])
+            pos_cat = _ragged_gather(pos_cat, pos_poff[:-1][keep], pos_poff[1:][keep])
+            tf_boff = _offsets(np.diff(tf_boff)[keep])
+            pos_poff = _offsets(np.diff(pos_poff)[keep])
+            docs_all = docs_all[keep]
+            tf_all = tf_all[keep]
+            norms_all = norms_all[keep]
+            counts = np.bincount(t_id, minlength=len(term_starts))
+            nz = np.flatnonzero(counts)
+            if nz.size == 0:
+                return _postings_pa_schema().empty_table()
+            term_names = term_names[nz]
+            term_starts = _offsets(counts[nz])[:-1]
+
+    return encode_posting_rows(
+        tbl["field"][0].as_py(), term_names, term_starts, docs_all, tf_all,
+        norms_all, tfs_cat, tf_boff, pos_cat, pos_poff, shard_postings)
+
+
+def _merge_writer(index_dir: str, shard_postings: int, deleted: np.ndarray):
+    """cogroup applyInArrow kernel: one (target, part) group of source
+    posting rows (+ the target's docmeta rows at part 0) -> that part's
+    parquet ON DISK + 1 stats row, as a build task does.
+    ``n_docs`` / ``sum_dl`` count the live docmeta rows written;
+    ``doc_base`` and ``fp_sum`` are left 0 (the driver derives them
+    from the source entries)."""
+
+    def kernel(key, postings, docmeta):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from ..functions.varint import decode_varint, varint_value_offsets
-
-        out = {c: [] for c in _POSTING_COLS + ["seg"]}
-        if not len(pdf):
-            return pd.DataFrame(out)
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        t_codes, t_uniq = pd.factorize(cols["term"], sort=False)
-        ord_arr = np.fromiter(
-            (seg_order[s] for s in cols["seg"]), dtype=np.int64, count=len(pdf))
-        idx = np.lexsort((cols["shard"], ord_arr, t_codes))
-        c_sorted = t_codes[idx]
-        row_t_starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
-        # posting-space start of each term
-        term_starts = _offsets(cols["df"][idx].astype(np.int64))[row_t_starts]
-        term_names = t_uniq[c_sorted[row_t_starts]]
-
-        docs_all = decode_docs_concat(cols["docs"][idx], cols["blk_n"][idx])
-        # tf values (needed for stats + position boundaries); blob bytes reused
-        tfs_cat = b"".join(cols["tfs"][idx])
-        tf_all = decode_varint(tfs_cat)
-        tf_boff = varint_value_offsets(tfs_cat)          # n_post+1
-        pos_cat = b"".join(cols["pos"][idx])
-        # per-POSTING pos byte offsets (n_post+1)
-        pos_poff = varint_value_offsets(pos_cat)[_offsets(tf_all)]
-        norms_all = np.frombuffer(b"".join(cols["norms"][idx]),
-                                  dtype=np.uint8).astype(np.int64)
-
-        if deleted.size:
-            di = np.searchsorted(deleted, docs_all)
-            dic = np.minimum(di, len(deleted) - 1)
-            keep = ~((di < len(deleted)) & (deleted[dic] == docs_all))
-            if not keep.all():
-                t_id = np.repeat(np.arange(len(term_starts)),
-                                 np.diff(np.append(term_starts, len(docs_all))))[keep]
-                tfs_cat = _ragged_gather(tfs_cat, tf_boff[:-1][keep],
-                                         tf_boff[1:][keep])
-                pos_cat = _ragged_gather(pos_cat, pos_poff[:-1][keep],
-                                         pos_poff[1:][keep])
-                tf_boff = _offsets(np.diff(tf_boff)[keep])
-                pos_poff = _offsets(np.diff(pos_poff)[keep])
-                docs_all = docs_all[keep]
-                tf_all = tf_all[keep]
-                norms_all = norms_all[keep]
-                n_post = len(docs_all)
-                counts = np.bincount(t_id, minlength=len(term_starts))
-                nz = np.flatnonzero(counts)
-                if nz.size == 0:
-                    return pd.DataFrame(out)
-                term_names = term_names[nz]
-                term_starts = _offsets(counts[nz])[:-1]
-                if n_post == 0:
-                    return pd.DataFrame(out)
-
-        table = encode_posting_rows(
-            cols["field"][0], term_names, term_starts, docs_all, tf_all,
-            norms_all, tfs_cat, tf_boff, pos_cat, pos_poff, shard_postings)
-        # multi-group pass (merge_many): the target segment id rides in
-        # on the grouping column
-        return table.append_column("seg", pa.array(
-            np.full(table.num_rows, cols["__target"][0], np.int32))).to_pandas()
+        target, part = (k.as_py() for k in key)
+        rows = _merge_postings(postings, shard_postings, deleted)
+        postings_bytes = _atomic_parquet_write(
+            rows, os.path.join(index_dir, "postings", f"seg={target}"),
+            row_group_size=2048, name=f"part-{part:05d}.parquet")
+        n_docs = sum_dl = 0
+        if part == 0:
+            meta = docmeta.select(_DOCMETA_COLS)
+            if deleted.size:
+                meta = meta.filter(pa.array(
+                    ~np.isin(meta["doc_id"].to_numpy(), deleted)))
+            meta = meta.sort_by("doc_id")
+            _atomic_parquet_write(
+                meta, os.path.join(index_dir, "docmeta", f"seg={target}"),
+                row_group_size=65536)
+            n_docs, sum_dl = meta.num_rows, pc.sum(meta["dl"]).as_py() or 0
+        return pa.Table.from_pylist([{
+            "seg": target, "n_docs": n_docs, "doc_base": 0, "sum_dl": sum_dl,
+            "n_terms": len(pc.unique(rows["term"])),
+            "n_postings": pc.sum(rows["df"]).as_py() or 0,
+            "fp_sum": 0, "postings_bytes": postings_bytes,
+        }], schema=_stats_pa_schema())
 
     return kernel
 
@@ -206,12 +237,20 @@ def merge_many(spark: SparkSession, index_dir: str,
                shard_postings: int = DEFAULT_SHARD_POSTINGS,
                purge_deleted: bool = False) -> Manifest:
     """Execute a whole MERGE WAVE — several disjoint groups of
-    doc_base-adjacent segments — in ONE distributed pass: every source
-    row maps to its target segment id, the kernel runs grouped by
-    (target, term_bucket), and there is a single postings write, a
-    single docmeta write, and ONE manifest commit. At 1000 executors a
-    tier's worth of merges is one job instead of len(groups) sequential
-    job chains.
+    doc_base-adjacent segments — in ONE cogrouped pass and ONE manifest
+    commit. Every source row maps to its target segment id and a part
+    ``term_bucket % n_parts(target)``, where ``n_parts`` is the
+    target's source postings bytes over ``MERGE_PART_BYTES`` (rounded
+    up; a per-task memory budget). Posting and
+    docmeta rows cogroup by (target, part); each group writes its own
+    part file (part 0 also the docmeta) and returns one stats row,
+    which the driver sums per target into the manifest entry. At 1000
+    executors a tier's worth of merges is one job instead of
+    len(groups) sequential job chains.
+
+    Target ids sit above every committed id, so no manifest lists their
+    dirs; they are cleared before the job, which drops whatever an
+    interrupted earlier attempt left there.
 
     ``shard_postings`` is rounded UP to a multiple of the 128-doc block
     size (shard boundaries must fall on block boundaries).
@@ -223,20 +262,15 @@ def merge_many(spark: SparkSession, index_dir: str,
     enumeration still walks the range and masks with the retained
     tombstones, so queries need no special case.
     """
-    deleted_arr = None
-    if purge_deleted:
-        from .delete import load_deleted_ids
-
-        pre = read_manifest(index_dir)
-        if pre is not None:
-            deleted_arr = load_deleted_ids(index_dir, pre)
-        if deleted_arr is None or deleted_arr.size == 0:
-            deleted_arr = None
-            purge_deleted = False
-
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest under {index_dir}")
+    deleted = np.empty(0, np.int64)
+    if purge_deleted:
+        from .delete import load_deleted_ids
+
+        deleted = load_deleted_ids(index_dir, m)
+        purge_deleted = bool(deleted.size)
     by_id = {s["seg"]: s for s in m.segments}
     groups = [list(g) for g in groups if g]
     flat = [s for g in groups for s in g]
@@ -254,100 +288,46 @@ def merge_many(spark: SparkSession, index_dir: str,
         t: sorted((by_id[s] for s in g), key=lambda s: s["doc_base"])
         for g, t in zip(groups, targets)
     }
-    # global source order by doc_base: correct within every group
-    all_srcs = sorted((by_id[s] for s in flat), key=lambda s: s["doc_base"])
-    seg_order = {s["seg"]: i for i, s in enumerate(all_srcs)}
+    n_parts = {
+        t: max(1, -(-sum(s.get("postings_bytes", 0) for s in srcs)
+                    // MERGE_PART_BYTES))
+        for t, srcs in srcs_by_target.items()
+    }
+    for t in targets:
+        for sub in ("postings", "docmeta"):
+            shutil.rmtree(os.path.join(index_dir, sub, f"seg={t}"),
+                          ignore_errors=True)
 
-    tmap = F.create_map(
-        *[F.lit(x) for pair in seg_to_target.items() for x in pair])
+    def lit_map(d):
+        return F.create_map(*[F.lit(x) for pair in d.items() for x in pair])
+
+    target = lit_map(seg_to_target)[F.col("seg")]
     postings = (
         spark.read.parquet(f"{index_dir}/postings")
         .filter(F.col("seg").isin(flat))
-        .withColumn("__target", tmap[F.col("seg")])
+        .withColumn("__target", target)
+        .withColumn("__part", F.col("term_bucket") % lit_map(n_parts)[target])
     )
-    # Correctness invariant (ADVICE r1, medium): across ALL output rows
-    # of a (target, term), doc ranges must be disjoint so the
-    # query-side shard-ordered concat stays sorted — a kernel group
-    # must see EVERY row of a term within its target. Hot terms (any
-    # shard > 0 row in the group) pass through as a pure-JVM
-    # projection; cold terms concat + re-shard in the kernel. When
-    # purging, hot rows also go through the kernel (their postings may
-    # contain tombstoned docs).
-    kernel = _merge_kernel_factory(seg_order, shard_postings,
-                                   deleted=deleted_arr)
-    has_hot = (not purge_deleted
-               and bool(postings.filter(F.col("shard") > 0).head(1)))
-    if not has_hot:
-        merged = postings.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=POSTINGS_SCHEMA)
-    else:
-        hot_terms = (
-            postings.filter(F.col("shard") > 0)
-            .select("__target", "term_bucket", "term").distinct()
-        )
-        cold = postings.join(F.broadcast(hot_terms),
-                             ["__target", "term_bucket", "term"], "left_anti")
-        merged_cold = cold.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=POSTINGS_SCHEMA)
-        passthrough = (
-            postings.join(F.broadcast(hot_terms),
-                          ["__target", "term_bucket", "term"], "left_semi")
-            .withColumn("seg", F.col("__target").cast("int"))
-            .select(*merged_cold.columns)
-        )
-        merged = merged_cold.unionByName(passthrough)
-    # shard renumbering per (segment, term) in doc order (metadata-sized)
-    w = Window.partitionBy("seg", "term").orderBy(F.element_at("blk_first", 1))
-    merged = merged.withColumn("shard", F.row_number().over(w) - F.lit(1))
-    # dynamic overwrite scoped to THIS write (only the source/target seg
-    # partitions are replaced; a session-global conf would leak — it
-    # also suppresses the root _SUCCESS marker for every later
-    # partitioned write in the session, e.g. ivf_build's)
-    merged.sortWithinPartitions("term").write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("seg").parquet(f"{index_dir}/postings")
-
     docmeta = (
         spark.read.parquet(f"{index_dir}/docmeta")
         .filter(F.col("seg").isin(flat))
+        .withColumn("__target", target)
+        .withColumn("__part", F.lit(0))
     )
-    if purge_deleted:
-        dels_df = spark.createDataFrame(
-            [(int(x),) for x in deleted_arr], "doc_id long")
-        docmeta = docmeta.join(F.broadcast(dels_df), "doc_id", "left_anti")
-    docmeta.withColumn("seg", tmap[F.col("seg")].cast("int")) \
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("seg").parquet(f"{index_dir}/docmeta")
-
-    stats_rows = {
-        r["seg"]: r for r in spark.read.parquet(f"{index_dir}/postings")
-        .filter(F.col("seg").isin(targets))
-        .groupBy("seg")
-        .agg(F.count_distinct("term").alias("n"), F.sum("df").alias("np"))
-        .collect()
-    }
-    live_rows = {}
-    if purge_deleted:
-        live_rows = {
-            r["seg"]: r for r in spark.read.parquet(f"{index_dir}/docmeta")
-            .filter(F.col("seg").isin(targets))
-            .groupBy("seg")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl"))
-            .collect()
-        }
+    stats = {t: Counter() for t in targets}
+    for r in (postings.groupBy("__target", "__part")
+              .cogroup(docmeta.groupBy("__target", "__part"))
+              .applyInArrow(_merge_writer(index_dir, shard_postings, deleted),
+                            schema=stats_schema())
+              .collect()):
+        stats[r["seg"]].update(r.asDict())
 
     new_entries = []
     for t in targets:
-        srcs = srcs_by_target[t]
+        srcs, st = srcs_by_target[t], stats[t]
         fp = 0
         for s in srcs:
             fp ^= int(s["input_fingerprint"], 16)
-        pdir = os.path.join(index_dir, "postings", f"seg={t}")
-        postings_bytes = sum(
-            os.path.getsize(os.path.join(pdir, f))
-            for f in os.listdir(pdir) if f.endswith(".parquet")
-        ) if os.path.isdir(pdir) else 0
-        st = stats_rows.get(t)
         entry = {
             "seg": int(t),
             "n_docs": sum(s["n_docs"] for s in srcs),
@@ -356,18 +336,16 @@ def merge_many(spark: SparkSession, index_dir: str,
             "doc_hi": max(s.get("doc_hi", s["doc_base"] + s["n_docs"])
                           for s in srcs),
             "sum_dl": sum(s["sum_dl"] for s in srcs),
-            "n_terms": int(st["n"]) if st else 0,
-            "n_postings": (int(st["np"] or 0) if purge_deleted and st
-                           else sum(s["n_postings"] for s in srcs)),
+            "n_terms": st["n_terms"],
+            "n_postings": st["n_postings"],
             "input_fingerprint": f"{fp:016x}",
-            "postings_bytes": int(postings_bytes),
+            "postings_bytes": st["postings_bytes"],
             "source": "merge(" + ",".join(str(s["seg"]) for s in srcs) + ")",
         }
         if purge_deleted:
-            lv = live_rows.get(t)
             entry["purged"] = True
-            entry["n_live"] = int(lv["n"]) if lv else 0
-            entry["sum_dl_live"] = int(lv["dl"] or 0) if lv else 0
+            entry["n_live"] = st["n_docs"]
+            entry["sum_dl_live"] = st["sum_dl"]
         elif any("n_live" in s for s in srcs):
             # merging a purged segment with unpurged ones: unpurged
             # sides stay delete-blind, matching per-segment Lucene

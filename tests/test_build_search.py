@@ -158,16 +158,20 @@ def test_fastpath_guard_respects_real_split_size(spark, tmp_path):
         spark.conf.unset("spark.sql.files.minPartitionNum")
 
 
-def test_fastpath_refused_for_multifile_segments(spark, tmp_path):
-    """A merged segment written by Spark has multiple parquet files;
-    bin-packing has no segment affinity, so the guard must refuse."""
-    from lucene_solr_spark.operators.merge import merge_segments
+def test_fastpath_refused_for_multifile_segments(spark, tmp_path, monkeypatch):
+    """A merged segment salted over several term parts has one parquet
+    file per part; bin-packing has no segment affinity, so the guard
+    must refuse."""
+    from lucene_solr_spark.operators import merge
     from lucene_solr_spark.sources import load_source_table
 
     corpus = load_source_table(spark, "/root/testdata/sf0.001")
     d = str(tmp_path / "idx")
     m = build_index(spark, corpus, d, docs_per_seg=64)
-    merge_segments(spark, d, m.seg_ids[:4])
+    # a part budget below the sources' postings bytes salts the merge
+    monkeypatch.setattr(merge, "MERGE_PART_BYTES",
+                        m.segments[0]["postings_bytes"])
+    merge.merge_segments(spark, d, m.seg_ids[:4])
     idx = IndexReader(spark, d)
     files = idx._seg_file_sizes()
     if all(len(fs) == 1 for fs in files.values()):

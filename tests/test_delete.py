@@ -144,6 +144,31 @@ def test_expunge_deletes_physical_purge(spark, corpus, tmp_path):
     assert rdr2.count("*") == n_total - len(victims)
 
 
+@pytest.mark.parametrize("n_deleted", [63, 64])
+def test_expunge_of_a_mostly_or_fully_deleted_segment(spark, corpus, tmp_path,
+                                                      n_deleted):
+    """Every posting of a segment's terms tombstoned but one doc (63) or
+    all of it (64): the purged segment is written empty-or-nearly, and
+    searches equal a fresh index over the live docs."""
+    from lucene_solr_spark.operators.merge import expunge_deletes
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, docs_per_seg=64)
+    n_total = IndexReader(spark, d).doc_count
+    delete_documents(spark, d, range(n_deleted))
+    m = expunge_deletes(spark, d)
+    assert m.doc_count == n_total - n_deleted
+
+    live = corpus.filter(F.col("doc_id") >= n_deleted)
+    fresh_dir = str(tmp_path / "fresh")
+    build_index(spark, live, fresh_dir, docs_per_seg=64)
+    rdr, fresh = IndexReader(spark, d), IndexReader(spark, fresh_dir)
+    assert rdr.doc_count == fresh.doc_count and rdr.sum_dl == fresh.sum_dl
+    for q in MERGE_QUERIES:
+        assert rdr.search_with_total(q, k=30) == fresh.search_with_total(q, k=30), q
+    assert rdr.count("*") == n_total - n_deleted
+
+
 def test_over_cap_delete_fallback_matches_numpy_path(spark, corpus, tmp_path,
                                                      monkeypatch):
     """Above DELETED_DRIVER_CAP the reader must switch every masking

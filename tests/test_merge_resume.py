@@ -265,3 +265,145 @@ def test_resume_with_sparse_doc_ids(spark, corpus, tmp_path):
     n_src = sparse.count()
     assert len(ids) == n_src, "docs lost or duplicated on sparse resume"
     assert len(set(ids)) == n_src
+
+
+def _posting_rows(index_dir, seg):
+    """Every posting row of one segment dir (all part files) except its
+    ``seg`` column, in (term, shard) order."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(f"{index_dir}/postings/seg={seg}").to_pylist()
+    return sorted(({c: v for c, v in r.items() if c != "seg"} for r in rows),
+                  key=lambda r: (r["term"], r["shard"]))
+
+
+def test_remerge_equals_direct_merge_for_sharded_terms(spark, corpus, tmp_path):
+    """Merging two merged segments re-blocks their sharded (hot) terms
+    like any other term, so 4+4 then 2 -> 1 equals one 8 -> 1 merge in
+    every posting column, shard layout included."""
+    two, one = str(tmp_path / "two"), str(tmp_path / "one")
+    m0 = build_index(spark, corpus, two, docs_per_seg=64)
+    build_index(spark, corpus, one, docs_per_seg=64)
+    merge_segments(spark, two, m0.seg_ids[:4], shard_postings=128)
+    mid = merge_segments(spark, two, m0.seg_ids[4:], shard_postings=128)
+    final = merge_segments(spark, two, mid.seg_ids, shard_postings=128)
+    direct = merge_segments(spark, one, m0.seg_ids, shard_postings=128)
+    got = _posting_rows(two, final.seg_ids[0])
+    want = _posting_rows(one, direct.seg_ids[0])
+    assert any(r["shard"] > 0 for r in want), "expected sharded terms"
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g == w, (w["term"], w["shard"])
+
+
+def test_merge_clears_files_left_by_an_interrupted_wave(spark, corpus, tmp_path):
+    """An earlier merge attempt that died before its manifest commit
+    left parquet files under the next target id. Readers never list
+    that dir; the next merge wave clears it before writing, so only its
+    own files remain and results are unchanged."""
+    import shutil
+
+    from lucene_solr_spark.operators.merge import MERGE_SEG_BASE
+
+    d = str(tmp_path / "idx")
+    m0 = build_index(spark, corpus, d, docs_per_seg=64)
+    oracle = OracleIndex(sorted(
+        (r["doc_id"], r["content"]) for r in corpus.select("doc_id", "content").collect()))
+    expected = {q: oracle.search(q, k=30) for q in MERGE_QUERIES}
+
+    def check(reader):
+        for q in MERGE_QUERIES:
+            got, total = reader.search_with_total(q, k=30)
+            assert [(dd, np.float32(s)) for dd, s in got] == \
+                   [(dd, np.float32(s)) for dd, s in expected[q].score_docs], q
+            assert total == expected[q].total_hits, q
+
+    target = MERGE_SEG_BASE  # the id the next merge wave writes
+    src = m0.seg_ids[0]
+    for sub in ("postings", "docmeta"):
+        os.makedirs(f"{d}/{sub}/seg={target}")
+        shutil.copy(f"{d}/{sub}/seg={src}/part-00000.parquet",
+                    f"{d}/{sub}/seg={target}/part-00003.parquet")
+    before = IndexReader(spark, d)
+    check(before)
+
+    m1 = merge_segments(spark, d, m0.seg_ids[:4])
+    assert target in m1.seg_ids
+    check(before)
+    check(IndexReader(spark, d))
+    rep = verify_index(spark, d, corpus)
+    assert rep["ok"], rep["problems"]
+    for sub in ("postings", "docmeta"):
+        assert os.listdir(f"{d}/{sub}/seg={target}") == ["part-00000.parquet"], sub
+
+
+def test_merge_salted_over_parts(spark, corpus, tmp_path, monkeypatch):
+    """A target whose source postings exceed MERGE_PART_BYTES is salted
+    over ceil(bytes / MERGE_PART_BYTES) term_bucket parts: one file per
+    part, every term in exactly one file, and the union equals a
+    one-part merge."""
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.operators import merge
+
+    salted, plain = str(tmp_path / "salted"), str(tmp_path / "plain")
+    m0 = build_index(spark, corpus, salted, docs_per_seg=64)
+    build_index(spark, corpus, plain, docs_per_seg=64)
+    baseline = IndexReader(spark, salted)
+    expected = {q: baseline.search_with_total(q, k=30) for q in MERGE_QUERIES}
+    total = sum(s["postings_bytes"] for s in m0.segments)
+    monkeypatch.setattr(merge, "MERGE_PART_BYTES", total // 4 + 1)
+    (seg,) = merge_segments(spark, salted, m0.seg_ids).seg_ids
+    monkeypatch.undo()
+    (seg_plain,) = merge_segments(spark, plain, m0.seg_ids).seg_ids
+
+    pdir = f"{salted}/postings/seg={seg}"
+    files = sorted(os.listdir(pdir))
+    assert files == [f"part-{p:05d}.parquet" for p in range(4)]
+    owner = {}
+    for f in files:
+        for term in set(pq.read_table(f"{pdir}/{f}", columns=["term"])["term"].to_pylist()):
+            assert term not in owner, (term, owner.get(term), f)
+            owner[term] = f
+    assert _posting_rows(salted, seg) == _posting_rows(plain, seg_plain)
+
+    merged = IndexReader(spark, salted)
+    for q in MERGE_QUERIES:
+        assert merged.search_with_total(q, k=30) == expected[q], q
+    rep = verify_index(spark, salted, corpus)
+    assert rep["ok"], rep["problems"]
+
+
+def test_interrupted_write_leaves_nothing_a_reader_scans(spark, corpus, tmp_path,
+                                                         monkeypatch):
+    """A writer killed between ``write_table`` and the rename leaves
+    its temp file in the segment dir; readers must not scan it."""
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.operators import build as B
+
+    d = str(tmp_path / "idx")
+    m = build_index(spark, corpus, d, docs_per_seg=256)
+    before = IndexReader(spark, d)
+    dfs = before.global_dfs(["spark", "merge"])
+    expected = {q: before.search_with_total(q, k=20) for q in MERGE_QUERIES}
+
+    class Killed(Exception):
+        pass
+
+    def killed(*a, **k):
+        raise Killed
+
+    seg_dir = f"{d}/postings/seg={m.seg_ids[0]}"
+    table = pq.read_table(f"{seg_dir}/part-00000.parquet")
+    with monkeypatch.context() as mp:
+        mp.setattr(B.os, "replace", killed)
+        mp.setattr(B.os, "unlink", lambda path: None)
+        with pytest.raises(Killed):
+            B._atomic_parquet_write(table, seg_dir, row_group_size=2048)
+    assert len(os.listdir(seg_dir)) == 2, "the temp file should be left behind"
+
+    after = IndexReader(spark, d)
+    assert after.global_dfs(["spark", "merge"]) == dfs
+    for q in MERGE_QUERIES:
+        assert after.search_with_total(q, k=20) == expected[q], q
